@@ -78,7 +78,6 @@ def _build_kernel(metric_name: str):
         import numpy as np
         import pandas as pd
 
-        t0 = time.time()
         pdf = pdf.sort_values("id", kind="mergesort")  # deterministic insert order
         pts = np.column_stack(
             (pdf["_x"].to_numpy(np.float64), pdf["_y"].to_numpy(np.float64))
@@ -107,7 +106,6 @@ def _build_kernel(metric_name: str):
                 "vy": [float(r["data"][1]) for r in rows],
             }
         )
-        _ = t0
         return out
 
     return fn
@@ -322,6 +320,11 @@ def load_nodes(spark: SparkSession, path: str) -> DataFrame:
 
 def load_lineage(spark: SparkSession, path: str) -> DataFrame:
     done = sorted(completed_batches(spark, path))
+    if not done:
+        raise ValueError(
+            f"load_lineage: no completed batches at {path!r} — index empty "
+            f"or manifest missing"
+        )
     parts = [spark.read.parquet(f"{path}/lineage/batch={b}") for b in done]
     out = parts[0]
     for p in parts[1:]:
@@ -374,6 +377,30 @@ def _tree_from_pdf(pdf, metric) -> CoverTree:
     return CoverTree.from_rows(rows, metric)
 
 
+# node-side row kinds in the probe cogroup: a stored tree node, a live delta
+# insert, or a suppressed id (a tombstone, or the stale base copy of an update)
+_TREE, _INSERT, _SUPPRESSED = 0, 1, 2
+
+
+def _delta_overlay(
+    nodes: DataFrame, live: DataFrame, suppress: DataFrame, res: int
+) -> DataFrame:
+    """Per-cell overlay rows for the probe cogroup: each live insert keyed by
+    its clamped cell, and each stored copy of a suppressed id keyed by the
+    cell its current base tree holds it in (a broadcast semi-join, so a
+    cell's overlay counts exactly the tree rows it must drop)."""
+    inserts = with_xy_cell(
+        live.select("id", F.col("x").alias("vx"), F.col("y").alias("vy")),
+        _clamp01(F.col("vx")),
+        _clamp01(F.col("vy")),
+        res,
+    ).withColumn("kind", F.lit(_INSERT))
+    dropped = nodes.join(F.broadcast(suppress), "id", "left_semi").select(
+        "cell", "id", F.lit(_SUPPRESSED).alias("kind")
+    )
+    return inserts.unionByName(dropped, allowMissingColumns=True)
+
+
 def knn_probe_index(
     probes: DataFrame,
     path: str,
@@ -391,7 +418,31 @@ def knn_probe_index(
 
     Exactness: same ring-guarantee logic as joins.knn_join; unresolved
     probes re-run with the ring doubled against the same stored trees.
+
+    ``streaming.incremental.knn_probe_live`` runs this same pass with a
+    delta-log overlay (``_delta_overlay``) on the node side of the cogroup:
+    a cell holding ``s`` suppressed rows asks its tree for ``k + s``
+    neighbours and drops the suppressed ids — at most ``s`` answers can be
+    dropped, so at least ``k`` survive or the tree is exhausted — then
+    merges a brute pass over the cell's live inserts. Every cell thus
+    returns the exact top-k of its live records, and the ring guarantee
+    and escalation above stay exact unchanged.
     """
+    return _knn_probe(probes, path, k, id_col=id_col, x_col=x_col, y_col=y_col)
+
+
+def _knn_probe(
+    probes: DataFrame,
+    path: str,
+    k: int,
+    *,
+    id_col: str,
+    x_col: str,
+    y_col: str,
+    delta: tuple[DataFrame, DataFrame] | None = None,
+) -> DataFrame:
+    """knn_probe_index over base ⊕ ``delta`` = (live inserts with id/x/y,
+    suppressed ids); ``None`` probes the stored trees alone."""
     from pyspark.sql import Window
 
     from metric_search_spark.functions.spatial import kring_cells_col
@@ -412,7 +463,15 @@ def knn_probe_index(
             f"operators.joins.knn_join with an explicit coord_scale"
         )
     metric = get_metric(metric_name)
-    nodes = load_nodes(spark, path).persist()
+    base = load_nodes(spark, path)
+    nodes = base.withColumn("kind", F.lit(_TREE))
+    if delta is not None:
+        live, suppress = delta
+        nodes = nodes.unionByName(
+            _delta_overlay(base, live, suppress, res), allowMissingColumns=True
+        )
+    # one cache for every ring round: the overlay is derived once per call
+    nodes = nodes.persist()
     grid_n = 1 << res
 
     probes_c = with_xy_cell(
@@ -435,17 +494,40 @@ def knn_probe_index(
             return pd.DataFrame(
                 {"query_id": [], "neighbor_id": [], "dist": []}
             ).astype({"query_id": "int64", "neighbor_id": "int64", "dist": "float64"})
-        tree = _tree_from_pdf(node_pdf, metric)
-        ids = node_pdf["id"].to_numpy()
+        kind = node_pdf["kind"].to_numpy()
+        tree_pdf = node_pdf[kind == _TREE]
+        ins_pdf = node_pdf[kind == _INSERT]
+        sup = kind == _SUPPRESSED
+        dropped = set(node_pdf["id"].to_numpy()[sup].tolist())
+        # one suppressed row drops at most one answer: k survive the filter
+        # unless the tree runs out of records
+        fetch = k + int(sup.sum())
+        tree = _tree_from_pdf(tree_pdf, metric)
+        ids = tree_pdf["id"].to_numpy()
+        lx = ins_pdf["vx"].to_numpy(np.float64)
+        ly = ins_pdf["vy"].to_numpy(np.float64)
+        lids = ins_pdf["id"].to_numpy()
         qs, ns, ds = [], [], []
         P = np.column_stack(
             (probe_pdf["_x"].to_numpy(np.float64), probe_pdf["_y"].to_numpy(np.float64))
         )
         pids = probe_pdf["_id"].to_numpy()
         for i in range(len(P)):
-            for node, dist in tree.knn(P[i], k=k, prune="safe"):
+            hits = []
+            for node, dist in tree.knn(P[i], k=fetch, prune="safe"):
+                nid = int(ids[node])
+                if nid not in dropped:
+                    hits.append((dist, nid))
+            if len(lids):
+                dx = lx - P[i, 0]
+                dy = ly - P[i, 1]
+                d = np.sqrt(dx * dx + dy * dy)
+                top = np.lexsort((lids, d))[:k]
+                hits += zip(d[top].tolist(), lids[top].tolist())
+            hits.sort()
+            for dist, nid in hits[:k]:
                 qs.append(int(pids[i]))
-                ns.append(int(ids[node]))
+                ns.append(nid)
                 ds.append(float(dist))
         return pd.DataFrame({"query_id": qs, "neighbor_id": ns, "dist": ds})
 

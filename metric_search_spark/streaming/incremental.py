@@ -7,10 +7,12 @@ per-cell tree index** (sources/index.py):
 - ``delete_ids``     — erase: tombstone rows (op='D'); like the reference,
                        deleting re-exposes nothing until refresh — probes
                        filter tombstones exactly
-- ``knn_probe_live`` — probes see base trees ⊕ delta: per-cell cover-tree
-                       descent on the base (sources/index.knn_probe_index)
-                       merged with a brute pass over the (small) delta, minus
-                       tombstoned ids — the merge is one window top-k
+- ``knn_probe_live`` — probes see base trees ⊕ delta in one stored-index
+                       pass (sources/index.knn_probe_index): the delta rides
+                       the per-cell cogroup as an overlay — each cell's tree
+                       answers k + (suppressed ids in that cell) and drops
+                       them, then a brute pass over the cell's live inserts
+                       merges in; the ring guarantee stays exact unchanged
 - ``compact_index``  — applies the delta: ONLY cells touched by delta rows
                        are rebuilt (cell-scoped refresh, no global lock
                        analog needed) and the delta is cleared
@@ -37,6 +39,7 @@ from metric_search_spark.operators.joins import _clamp01
 from metric_search_spark.sources.index import (
     NODE_SCHEMA,
     _build_kernel,
+    _knn_probe,
     completed_batches,
     index_meta,
     load_nodes,
@@ -65,10 +68,6 @@ def _require_local(path: str) -> None:
             f"path, got {path!r}; object-store deployments need a "
             f"Hadoop-FS-based maintenance variant"
         )
-
-# per-round {over-fetch bucket -> probe count} histograms from the most
-# recent _probe_base_minus_dead call (diagnostics; pinned in tests)
-LAST_FETCH_BUCKETS: list[dict[int, int]] = []
 
 
 def append_delta(
@@ -119,11 +118,15 @@ def read_delta(spark: SparkSession, path: str) -> DataFrame | None:
 
 
 def _effective_delta(delta: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(live inserts, tombstoned ids) under LATEST-OP-WINS semantics: the
+    """(live inserts, suppressed ids) under LATEST-OP-WINS semantics: the
     delta log is ordered by ``seq``, so delete→reinsert reinstates the id
     (the reference supports erase-then-insert, tree.cpp:526/391) and a
     reinsert of a base id is an UPDATE. Ties at equal seq (same call, or
-    legacy pre-seq rows reading as NULL) resolve to the tombstone."""
+    legacy pre-seq rows reading as NULL) resolve to the tombstone.
+
+    Every id the log touches suppresses its base copy: a tombstone removes
+    it, and a live row REPLACES it, so the stale copy never competes with
+    the fresh one."""
     w = Window.partitionBy("id").orderBy(
         F.col("seq").desc_nulls_last(), F.col("op").asc()
     )
@@ -132,9 +135,8 @@ def _effective_delta(delta: DataFrame) -> tuple[DataFrame, DataFrame]:
         .where(F.col("_rn") == 1)
         .drop("_rn")
     )
-    dead = latest.where(F.col("op") == "D").select("id")
     live = latest.where(F.col("op") == "I").select("id", "x", "y")
-    return live, dead
+    return live, delta.select("id").distinct()
 
 
 def knn_probe_live(
@@ -146,194 +148,19 @@ def knn_probe_live(
     x_col: str = "x",
     y_col: str = "y",
 ) -> DataFrame:
-    """kNN over base-index ⊕ delta: exact merge of the stored-tree answer
-    with a brute pass over live delta rows, excluding tombstoned ids."""
-    from metric_search_spark.operators.joins import knn_join
-    from metric_search_spark.sources.index import knn_probe_index
-
-    spark = probes.sparkSession
-    delta = read_delta(spark, path)
-    if delta is None:
-        return knn_probe_index(
-            probes, path, k=k, id_col=id_col, x_col=x_col, y_col=y_col
-        )
-    live, dead = _effective_delta(delta)
-    # SUPPRESS from the base every delta-touched id, not just tombstones: a
-    # live insert of a base id is an UPDATE — its stale base copy must not
-    # compete with the delta-side fresh copy in the merge window
-    suppress = dead.unionByName(live.select("id")).distinct()
-    base = _probe_base_minus_dead(
-        probes, path, suppress, k, id_col=id_col, x_col=x_col, y_col=y_col
+    """kNN over base-index ⊕ delta in ONE stored-index pass: the delta's
+    live inserts and suppressed ids ride the per-cell cover-tree cogroup as
+    an overlay (sources.index.knn_probe_index documents the exactness)."""
+    delta = read_delta(probes.sparkSession, path)
+    return _knn_probe(
+        probes,
+        path,
+        k,
+        id_col=id_col,
+        x_col=x_col,
+        y_col=y_col,
+        delta=None if delta is None else _effective_delta(delta),
     )
-    parts = [base]
-    if not live.isEmpty():
-        vs_delta = knn_join(
-            probes.select(
-                F.col(id_col).alias("id"),
-                F.col(x_col).alias("x"),
-                F.col(y_col).alias("y"),
-            ),
-            live,
-            k=k,
-            vec_col=None,
-        )
-        parts.append(vs_delta.select("query_id", "neighbor_id", "dist"))
-    merged = parts[0]
-    for p in parts[1:]:
-        merged = merged.unionByName(p)
-    w = Window.partitionBy("query_id").orderBy("dist", "neighbor_id")
-    return (
-        merged.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
-
-
-def _probe_base_minus_dead(
-    probes: DataFrame,
-    path: str,
-    dead: DataFrame,
-    k: int,
-    *,
-    id_col: str,
-    x_col: str,
-    y_col: str,
-) -> DataFrame:
-    """Exact (query_id, neighbor_id, dist) rows covering ≥ top-k of
-    (base − tombstones) per probe, over-fetching by each probe's LOCAL
-    tombstone pressure instead of the global count (VERDICT r2 item 6:
-    one hot cell's delete burst no longer inflates every probe's fetch).
-
-    Per-probe over-fetch seed = the tombstoned-row count summed over the
-    probe's ring-1 cells, bucketed to the next power of two so one
-    knn_probe_index invocation serves each bucket. Exactness does NOT
-    rest on that seed: knn_probe_index returns a distance-ordered prefix
-    of the base, and filtering tombstones from a prefix leaves a prefix
-    of the live ordering — so a probe is provably resolved when its
-    survivor count reaches k, or its fetch came back short (base
-    exhausted). Unresolved probes (e.g. a far-away burst pulled into an
-    expanded ring) retry with a doubled bucket; extra = n_dead is an
-    unconditional resolve, so the retry loop terminates in
-    O(log n_dead) rounds — and in the common case everything resolves
-    in round one with most probes fetching exactly k."""
-    from metric_search_spark.functions.spatial import kring_cells_col
-    from metric_search_spark.sources.index import knn_probe_index
-
-    spark = probes.sparkSession
-    p = probes.select(
-        F.col(id_col).cast("long").alias("_id"),
-        F.col(x_col).cast("double").alias("_x"),
-        F.col(y_col).cast("double").alias("_y"),
-    )
-    if p.isEmpty():  # fetched_parts[0] below would IndexError on no probes
-        return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, dist double"
-        )
-    # per-cell tombstone counts: tiny (bounded by the cell grid), so a
-    # driver-side collect feeds both the broadcast join and n_dead
-    d_cell_rows = (
-        load_nodes(spark, path)
-        .join(dead, "id", "left_semi")
-        .groupBy("cell")
-        .agg(F.count("*").alias("dead"))
-        .collect()
-    )
-    n_dead = int(sum(r["dead"] for r in d_cell_rows))
-    if n_dead == 0:
-        out = knn_probe_index(p, path, k=k, id_col="_id", x_col="_x", y_col="_y")
-        return out.select("query_id", "neighbor_id", "dist")
-
-    res, _, _ = index_meta(spark, path)
-    d_cell = spark.createDataFrame(
-        [(int(r["cell"]), int(r["dead"])) for r in d_cell_rows],
-        "cell long, dead long",
-    )
-    pc = p.withColumn(
-        "_cell",
-        cell_from_xy_col(_clamp01(F.col("_x")), _clamp01(F.col("_y")), res),
-    )
-    ring_dead = (
-        pc.select(
-            "_id",
-            F.explode(kring_cells_col(F.col("_cell"), res, 1)).alias("cell"),
-        )
-        .join(F.broadcast(d_cell), "cell")
-        .groupBy("_id")
-        .agg(F.sum("dead").alias("_d"))
-    )
-    seed = F.least(F.coalesce(F.col("_d"), F.lit(0)), F.lit(n_dead))
-    bucket = F.when(seed <= 0, F.lit(0)).otherwise(
-        F.least(
-            F.pow(F.lit(2.0), F.ceil(F.log2(seed))).cast("long"), F.lit(n_dead)
-        )
-    )
-    remaining = pc.join(ring_dead, "_id", "left").select(
-        "_id", "_x", "_y", bucket.alias("_b")
-    )
-    dead_n = dead.select(F.col("id").alias("neighbor_id"))
-    resolved_parts: list[DataFrame] = []
-    global LAST_FETCH_BUCKETS
-    LAST_FETCH_BUCKETS = []
-    while True:
-        # bucket histogram (same scan the bucket list needs anyway);
-        # recorded so tests/observability can see per-probe fetch pressure
-        hist = {
-            int(r["_b"]): int(r["count"])
-            for r in remaining.groupBy("_b").count().collect()
-        }
-        LAST_FETCH_BUCKETS.append(hist)
-        buckets = sorted(hist)
-        fetched_parts = []
-        for b in buckets:
-            sub = remaining.where(F.col("_b") == b).select("_id", "_x", "_y")
-            r = knn_probe_index(
-                sub, path, k=k + int(b), id_col="_id", x_col="_x", y_col="_y"
-            )
-            fetched_parts.append(
-                r.select("query_id", "neighbor_id", "dist").withColumn(
-                    "_fetch", F.lit(k + int(b))
-                )
-            )
-        fetched = fetched_parts[0]
-        for part in fetched_parts[1:]:
-            fetched = fetched.unionByName(part)
-        surv = fetched.join(dead_n, "neighbor_id", "left_anti")
-        stat = (
-            fetched.groupBy("query_id")
-            .agg(F.count("*").alias("_nf"), F.first("_fetch").alias("_fe"))
-            .join(
-                surv.groupBy("query_id").agg(F.count("*").alias("_ns")),
-                "query_id",
-                "left",
-            )
-            .select(
-                "query_id",
-                (
-                    (F.coalesce(F.col("_ns"), F.lit(0)) >= k)
-                    | (F.col("_nf") < F.col("_fe"))
-                ).alias("_ok"),
-            )
-        )
-        unres = stat.where(~F.col("_ok")).select(
-            F.col("query_id").alias("_id")
-        )
-        # probes absent from `fetched` found no base rows at all — resolved
-        resolved_parts.append(
-            surv.join(unres.select(F.col("_id").alias("query_id")), "query_id", "left_anti")
-            .select("query_id", "neighbor_id", "dist")
-        )
-        nxt = remaining.join(unres, "_id", "left_semi")
-        if nxt.isEmpty():
-            break
-        remaining = nxt.withColumn(
-            "_b",
-            F.least(
-                F.greatest(F.col("_b") * 2, F.lit(1)), F.lit(n_dead)
-            ),
-        )
-    out = resolved_parts[0]
-    for part in resolved_parts[1:]:
-        out = out.unionByName(part)
-    return out
 
 
 def compact_index(spark: SparkSession, path: str) -> int:
@@ -345,13 +172,10 @@ def compact_index(spark: SparkSession, path: str) -> int:
     if delta is None:
         return 0
     res, batches, metric_name = index_meta(spark, path)
-    live, dead = _effective_delta(delta)
+    # the same suppression knn_probe_live applies, so compaction lands the
+    # identical record set
+    live, suppress = _effective_delta(delta)
     nodes = load_nodes(spark, path)
-
-    # every delta-touched id suppresses its base copy: a tombstone removes
-    # it, a live row REPLACES it (update semantics — knn_probe_live merges
-    # exactly this way, so compaction must land the identical record set)
-    suppress = dead.unionByName(live.select("id")).distinct()
 
     live_c = live.withColumn(
         "cell", cell_from_xy_col(_clamp01(F.col("x")), _clamp01(F.col("y")), res)

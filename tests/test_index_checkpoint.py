@@ -53,6 +53,11 @@ def test_build_verify_and_lineage(spark, table, tmp_path):
     assert (lin["build_ms"] > 0).all()
 
 
+def test_load_lineage_without_completed_batch(spark, tmp_path):
+    with pytest.raises(ValueError, match="no completed batches"):
+        load_lineage(spark, str(tmp_path / "never_built"))
+
+
 def test_kill_resume_equivalence(spark, table, tmp_path):
     pdf, df = table
     p_full = str(tmp_path / "full")

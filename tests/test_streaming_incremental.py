@@ -127,10 +127,12 @@ def test_compaction_commit_point_and_idempotent_reapply(spark, tmp_path):
 
 def test_hot_cell_delete_burst_local_overfetch(spark, tmp_path):
     """VERDICT r2 item 6: a delete burst concentrated in one hot cell must
-    not inflate every probe's base fetch — probes whose ring-1 contains no
-    tombstoned cell fetch exactly k (bucket 0), only probes near the burst
-    pay, and answers stay exact vs brute force."""
-    from metric_search_spark.streaming import incremental
+    not inflate every probe's base fetch — the burst's suppressed rows land
+    in the hot cell's overlay only, so far cells fetch exactly k, only the
+    hot cell over-fetches (by its own tombstone count), and answers stay
+    exact vs brute force."""
+    from metric_search_spark.sources.index import _SUPPRESSED, _delta_overlay
+    from metric_search_spark.streaming.incremental import _effective_delta
 
     rng = np.random.default_rng(44)
     n_hot, n_far = 100, 200
@@ -167,12 +169,94 @@ def test_hot_cell_delete_burst_local_overfetch(spark, tmp_path):
     for qid, grp in got.sort_values(["query_id", "rank"]).groupby("query_id"):
         assert list(grp["neighbor_id"]) == want[int(qid)], qid
 
-    # fetch-pressure pin: every far probe sat in bucket 0 (fetched exactly
-    # k); only the probes whose ring-1 touches the hot cell over-fetched
-    hist0 = incremental.LAST_FETCH_BUCKETS[0]
-    assert hist0.get(0, 0) >= 30, hist0
-    assert sum(hist0.values()) == len(probes)
-    assert all(b <= 80 for b in hist0), hist0  # pow2 bucket capped at n_dead
+    # fetch-pressure pin: a cell's tree answers k + (its overlay's
+    # suppressed rows), so all 80 tombstones must sit in the hot cell's
+    # overlay and no far cell may carry an overlay row at all
+    nodes = load_nodes(spark, path)
+    hot_rows = nodes.where(F.col("id") < n_hot).select("cell").distinct()
+    hot_cells = {r["cell"] for r in hot_rows.collect()}
+    assert len(hot_cells) == 1, hot_cells
+    live, suppress = _effective_delta(read_delta(spark, path))
+    overlay = _delta_overlay(nodes, live, suppress, res=2).toPandas()
+    assert set(overlay["cell"]) == hot_cells, overlay
+    assert (overlay["kind"] == _SUPPRESSED).all(), overlay
+    assert sorted(overlay["id"]) == sorted(dead_ids)
+
+
+def _assert_probe_exact(spark, path, effective, probes, k):
+    want = _brute(effective, probes, k)
+    got = knn_probe_live(spark.createDataFrame(probes), path, k=k).toPandas()
+    assert got["query_id"].nunique() == len(probes)
+    for qid, grp in got.sort_values(["query_id", "rank"]).groupby("query_id"):
+        assert list(grp["neighbor_id"]) == want[int(qid)], qid
+
+
+def test_live_insert_into_cell_without_base_tree(spark, tmp_path):
+    """Live inserts landing in a cell the base index holds no tree for are
+    found by probes from that very cell (the overlay alone forms the cell's
+    node side)."""
+    rng = np.random.default_rng(81)
+    # base only in the left half of the res=2 grid: cell (3,3) is empty
+    pdf = pd.DataFrame(
+        {"id": np.arange(120), "x": 0.45 * rng.random(120), "y": rng.random(120)}
+    )
+    path = str(tmp_path / "idx_treeless")
+    build_index(spark.createDataFrame(pdf), path, res=2, batches=2)
+    new = pd.DataFrame(
+        {
+            "id": np.arange(500, 508),
+            "x": 0.76 + 0.22 * rng.random(8),
+            "y": 0.76 + 0.22 * rng.random(8),
+        }
+    )
+    append_delta(spark.createDataFrame(new), path)
+    effective = pd.concat([pdf, new]).reset_index(drop=True)
+    probes = pd.DataFrame({"id": [9001, 9002], "x": [0.8, 0.95], "y": [0.9, 0.8]})
+    _assert_probe_exact(spark, path, effective, probes, 3)
+
+
+def test_fully_tombstoned_cell_escalates(spark, tmp_path):
+    """Every base row of the probe's cell is tombstoned, so ring 1 holds
+    fewer than k live rows and the probe must escalate to stay exact."""
+    rng = np.random.default_rng(82)
+    corner = pd.DataFrame(  # cell (0,0) of the res=2 grid
+        {"id": np.arange(6), "x": 0.2 * rng.random(6), "y": 0.2 * rng.random(6)}
+    )
+    near = pd.DataFrame(  # cell (1,1): inside the corner's ring 1
+        {"id": [10, 11], "x": [0.3, 0.4], "y": [0.35, 0.45]}
+    )
+    far = pd.DataFrame(
+        {
+            "id": np.arange(100, 200),
+            "x": 0.55 + 0.43 * rng.random(100),
+            "y": rng.random(100),
+        }
+    )
+    pdf = pd.concat([corner, near, far]).reset_index(drop=True)
+    path = str(tmp_path / "idx_allgone")
+    build_index(spark.createDataFrame(pdf), path, res=2, batches=2)
+    delete_ids(spark.createDataFrame(corner[["id"]]), path)
+    effective = pd.concat([near, far]).reset_index(drop=True)
+    probes = pd.DataFrame({"id": [9001, 9002], "x": [0.05, 0.2], "y": [0.1, 0.02]})
+    _assert_probe_exact(spark, path, effective, probes, 5)
+
+
+def test_k_exceeds_cell_live_rows(spark, tmp_path):
+    """k larger than the live rows of a cell that mixes tombstones, an
+    update and inserts: the cell returns what it has and the ring
+    guarantee pulls the rest from its neighbours."""
+    pdf, path = _base(spark, tmp_path, n=150)
+    in_cell = pdf[(pdf["x"] < 0.25) & (pdf["y"] < 0.25)]
+    dead = in_cell["id"].iloc[:-2]
+    delete_ids(spark.createDataFrame(pd.DataFrame({"id": dead})), path)
+    upd = in_cell.iloc[-1:].assign(x=0.1, y=0.1)
+    new = pd.DataFrame({"id": [800], "x": [0.05], "y": [0.2]})
+    append_delta(spark.createDataFrame(pd.concat([upd, new])), path)
+    effective = pd.concat(
+        [pdf[~pdf["id"].isin({*dead, *upd["id"]})], upd, new]
+    ).reset_index(drop=True)
+    probes = pd.DataFrame({"id": [9001, 9002], "x": [0.12, 0.2], "y": [0.1, 0.2]})
+    _assert_probe_exact(spark, path, effective, probes, 8)
 
 
 def test_probe_rejects_non_l2_metric_index(spark, tmp_path):
@@ -317,8 +401,8 @@ def test_compact_refuses_object_store_paths(spark):
 
 
 def test_probe_live_empty_probes(spark, tmp_path):
-    """Zero probes + nonzero tombstones: the over-fetch machinery must
-    short-circuit to an empty result instead of IndexError-ing."""
+    """Zero probes + nonzero tombstones: the probe returns an empty result
+    instead of IndexError-ing."""
     pdf, path = _base(spark, tmp_path, n=60)
     delete_ids(spark.createDataFrame(pd.DataFrame({"id": pdf["id"].iloc[:5]})), path)
     empty = spark.createDataFrame([], "id long, x double, y double")
