@@ -63,13 +63,17 @@ def apriori(
     n = distinct.select(*basket_cols).distinct().count()
     if n == 0:
         return sp.createDataFrame([], "itemset string, k int, support long")
-    thresh_ok = lambda c: c * min_support_den >= n * min_support_num  # noqa: E731
+    frequent = F.col("support") * min_support_den >= n * min_support_num
 
-    # L1: frequent single items
-    l1_rows = distinct.groupBy("_item").agg(F.count("*").alias("support")).collect()
-    freq1 = sorted(
-        (r["_item"], int(r["support"])) for r in l1_rows if thresh_ok(r["support"])
+    # L1: frequent single items — thresholded in Spark, so only the
+    # frequent ones reach the driver
+    l1_rows = (
+        distinct.groupBy("_item")
+        .agg(F.count("*").alias("support"))
+        .where(frequent)
+        .collect()
     )
+    freq1 = sorted((r["_item"], int(r["support"])) for r in l1_rows)
     out_frames: list[tuple[str, int, int]] = [
         (it, 1, sup) for it, sup in freq1
     ]
@@ -102,13 +106,12 @@ def apriori(
             )
         )
         counted = (
-            tk1.groupBy("_set").agg(F.count("*").alias("support")).collect()
+            tk1.groupBy("_set")
+            .agg(F.count("*").alias("support"))
+            .where(frequent)
+            .collect()
         )
-        level = sorted(
-            (tuple(r["_set"]), int(r["support"]))
-            for r in counted
-            if thresh_ok(r["support"])
-        )
+        level = sorted((tuple(r["_set"]), int(r["support"])) for r in counted)
         if not level:
             break
         out_frames.extend((",".join(s), len(s), sup) for s, sup in level)

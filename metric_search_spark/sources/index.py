@@ -10,22 +10,41 @@ tree.cpp:143-147 — plus parent/child-position links replacing pointers).
 Layout under ``path/``:
 
     nodes/batch=<i>/...parquet   per-cell node rows for one cell-range batch
+    nodes/gen=<v>-<hex>/...      one compaction generation: every visible
+                                 node row as of snapshot v
+                                 (streaming.incremental.compact_index)
     lineage/batch=<i>/...        per-cell build metrics (rows, nodes,
-                                 max_level, build_ms, task lineage)
-    manifest/...                 one row per COMPLETED batch (cell range,
-                                 counts, wall ms)
+                                 max_level, build_ms)
+    snapshot/v<N>.json           index metadata, one file per version: res,
+                                 batches, metric, the completed build batches
+                                 (wall_s, n_nodes), the lineage dirs, the node
+                                 dirs that make up the visible index and the
+                                 delta files already folded into them
+
+**Snapshots**: readers pin the newest version (versions order numerically)
+with a plain driver-side file read — no Spark job — and never rename or
+delete anything. Writers publish version N+1 by exclusive create, so a
+reader never sees a half-written file and two writers cannot both commit
+the same version. An unreadable snapshot raises; read as "empty" it would
+silently bring deleted rows back.
 
 **Resumability (north rule)**: the cell space is split into ``batches``
 contiguous Morton prefix ranges; each batch commits atomically (Spark job
-commit) and then appends its manifest row. A killed job resumes by
-anti-joining the manifest against the batch list — only incomplete cell
-ranges are rebuilt. Per-partition lineage + throughput metrics are first-class
-outputs, not logs.
+commit) and then publishes a snapshot that adds it — the publish is the
+batch's commit point. A killed job resumes by skipping the batches the
+newest snapshot lists — only incomplete cell ranges are rebuilt.
+Per-partition lineage + throughput metrics are first-class outputs, not
+logs.
 """
 
 from __future__ import annotations
 
+import contextlib
+import json
+import os
+import re
 import time
+import uuid
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -43,9 +62,11 @@ NODE_SCHEMA = (
 )
 
 LINEAGE_SCHEMA = (
-    "cell long, n_rows long, n_nodes long, max_level int, min_level int, "
-    "build_ms double, covering_ok boolean"
+    "cell long, n_nodes long, n_rows long, max_level int, min_level int, "
+    "build_ms double"
 )
+
+_VERSION = re.compile(r"v(\d+)\.json")
 
 
 @dataclass
@@ -150,7 +171,10 @@ def build_index(
         res,
     ).withColumn("batch", _batch_col(F.col("cell"), res, batches))
 
-    done = completed_batches(spark, path)
+    snap = _snapshot(path) or {
+        "version": 0, "built": [], "lineage": [], "nodes": [], "delta_applied": []
+    }
+    done = {e["batch"] for e in snap["built"]}
     todo = [b for b in range(batches) if b not in done]
     if stop_after is not None:
         todo = todo[:stop_after]
@@ -165,180 +189,161 @@ def build_index(
     # whole build stage to interpreted execution; (3) resume after a kill
     # reuses the staged table (job-commit _SUCCESS marker) — no rescan.
     staged_path = f"{path}/staged"
-    staged = None
     if todo:
-        import os as _os
-
-        if not _os.path.exists(f"{staged_path}/_SUCCESS"):
+        if not os.path.exists(f"{staged_path}/_SUCCESS"):
             prepared.write.mode("overwrite").partitionBy("batch").parquet(
                 staged_path
             )
-        try:
-            staged = spark.read.parquet(staged_path)
-        except Exception:  # noqa: BLE001 — empty input stages no files
-            staged = None
+        # the known schema skips an inference job, and reads an empty stage
+        staged = spark.read.schema(prepared.schema).parquet(staged_path)
 
     kernel = _build_kernel(metric)
     for b in todo:
         t0 = time.time()
-        src_b = staged if staged is not None else prepared
-        part = src_b.where(F.col("batch") == b)
+        part = staged.where(F.col("batch") == b)
         nodes = part.groupBy("cell").applyInPandas(kernel, schema=NODE_SCHEMA)
         nodes.write.mode("overwrite").parquet(f"{path}/nodes/batch={b}")
-        built = spark.read.parquet(f"{path}/nodes/batch={b}")
+        built = spark.read.schema(NODE_SCHEMA).parquet(f"{path}/nodes/batch={b}")
         lineage = _lineage_from_nodes(built).withColumn(
             "build_ms", F.lit(round((time.time() - t0) * 1000.0, 1))
         )
         lineage.write.mode("overwrite").parquet(f"{path}/lineage/batch={b}")
         wall = time.time() - t0
-        n_nodes = built.count()
-        manifest_row = spark.createDataFrame(
-            [
-                (
-                    int(b),
-                    int(batches),
-                    int(res),
-                    metric,
-                    int(n_nodes),
-                    float(round(wall, 3)),
-                    float(round(n_nodes / wall, 1)) if wall > 0 else 0.0,
-                )
-            ],
-            "batch int, batches int, res int, metric string, n_nodes long, "
-            "wall_s double, rows_per_sec double",
-        )
-        # the manifest append is the commit point for the batch
-        manifest_row.write.mode("append").parquet(f"{path}/manifest")
+        n_nodes = _parquet_rows(f"{path}/nodes/batch={b}")
+        snap = {
+            **snap,
+            "version": snap["version"] + 1,
+            "res": int(res),
+            "batches": int(batches),
+            "metric": metric,
+            "built": snap["built"]
+            + [{"batch": int(b), "wall_s": round(wall, 3), "n_nodes": n_nodes}],
+            "lineage": snap["lineage"] + [f"lineage/batch={b}"],
+            "nodes": snap["nodes"] + [f"nodes/batch={b}"],
+        }
+        _publish(path, snap)  # the commit point for the batch
     return IndexInfo(path=path, res=res, batches=batches, metric=metric)
 
 
-def completed_batches(spark: SparkSession, path: str) -> set[int]:
+def _data_files(d: str) -> list[str]:
+    """Names of the data files Spark wrote into dir ``d`` (Spark's hidden
+    files — _SUCCESS, _temporary/, .crc — are not data)."""
+    return sorted(n for n in os.listdir(d) if n[0] not in "._")
+
+
+def _parquet_rows(d: str) -> int:
+    """Row count of a parquet dir, summed from its file footers on the
+    driver — no Spark job."""
+    import pyarrow.parquet as pq
+
+    return sum(pq.read_metadata(f"{d}/{n}").num_rows for n in _data_files(d))
+
+
+def _require_local(path: str) -> None:
+    """Snapshots are published and read with driver-local file ops
+    (exclusive create, listdir); an object-store path would need a
+    Hadoop-FS-based variant — refuse loudly instead of misreading it."""
+    if "://" in path:
+        raise NotImplementedError(
+            f"index metadata requires a driver-local filesystem path, got "
+            f"{path!r}; object-store deployments need a Hadoop-FS-based "
+            f"snapshot store"
+        )
+
+
+def _snapshot(path: str) -> dict | None:
+    """The newest published snapshot, or None if none was ever published."""
+    _require_local(path)
     try:
-        rows = spark.read.parquet(f"{path}/manifest").select("batch").collect()
-        return {r["batch"] for r in rows}
-    except Exception:  # noqa: BLE001 — no manifest yet
-        return set()
+        names = os.listdir(f"{path}/snapshot")
+    except FileNotFoundError:
+        return None
+    versions = [int(m[1]) for n in names if (m := _VERSION.fullmatch(n))]
+    if not versions:
+        return None
+    f = f"{path}/snapshot/v{max(versions)}.json"
+    try:
+        with open(f) as fh:
+            return json.load(fh)
+    except ValueError as e:  # a corrupt file is never "no index"
+        raise RuntimeError(f"unreadable index snapshot {f!r}") from e
+
+
+def _pinned(path: str, caller: str) -> dict:
+    snap = _snapshot(path)
+    if snap is None:
+        raise ValueError(
+            f"{caller}: no completed batches at {path!r} — index never built"
+        )
+    return snap
+
+
+def _publish(path: str, snap: dict) -> None:
+    """Commit ``snap`` as version ``snap['version']``: write a temp file,
+    fsync it, then hard-link it to its final name. The link is the
+    exclusive create — it fails if a concurrent writer already published
+    that version — and readers only ever see complete files."""
+    d = f"{path}/snapshot"
+    os.makedirs(d, exist_ok=True)
+    final = f"{d}/v{snap['version']}.json"
+    tmp = f"{d}/.{uuid.uuid4().hex}.tmp"
+    try:
+        with open(tmp, "w") as fh:
+            json.dump(snap, fh)
+            fh.flush()
+            os.fsync(fh.fileno())
+        os.link(tmp, final)
+    except FileExistsError as e:
+        raise RuntimeError(
+            f"snapshot {final!r} was published by a concurrent writer"
+        ) from e
+    finally:
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(tmp)
+    fd = os.open(d, os.O_RDONLY)
+    try:
+        os.fsync(fd)  # make the new directory entry durable
+    finally:
+        os.close(fd)
+
+
+def completed_batches(spark: SparkSession, path: str) -> set[int]:
+    snap = _snapshot(path)
+    return set() if snap is None else {e["batch"] for e in snap["built"]}
 
 
 def index_meta(spark: SparkSession, path: str) -> tuple[int, int, str]:
-    row = spark.read.parquet(f"{path}/manifest").select(
-        "res", "batches", "metric"
-    ).first()
-    return row["res"], row["batches"], row["metric"]
+    snap = _pinned(path, "index_meta")
+    return snap["res"], snap["batches"], snap["metric"]
 
 
-def compaction_batches(spark: SparkSession, path: str) -> list[str]:
-    """Generation batches written by streaming.incremental.compact_index,
-    ordered by their NUMERIC generation id — lexicographic name order would
-    invert shadowing the day generation ids change digit count."""
-    try:
-        rows = (
-            spark.read.parquet(f"{path}/manifest_compact").select("batch").collect()
-        )
-    except Exception:  # noqa: BLE001 — no compactions yet
-        return []
-
-    def gen_key(name: str):
-        tail = name.removeprefix("compact")
-        return (0, int(tail)) if tail.isdigit() else (1, name)
-
-    return sorted({r["batch"] for r in rows}, key=gen_key)
-
-
-def recover_node_dirs(path: str) -> None:
-    """Crash recovery for compact_index's GC directory swaps (local paths
-    only; object-store paths never reach the swap — compact_index refuses
-    them). For every ``batch=X``: a leftover ``__old`` with ``X`` present
-    is post-swap garbage (delete); ``__old`` with ``X`` MISSING means the
-    crash hit between the two renames — restore the new copy (``__tmp``)
-    if it exists, else the old one. Stray ``__tmp`` with ``X`` present is
-    an unswapped rewrite (delete; the next compaction redoes it)."""
-    import os
-    import shutil
-
-    nodes_dir = f"{path}/nodes"
-    if "://" in path or not os.path.isdir(nodes_dir):
-        return
-    entries = set(os.listdir(nodes_dir))
-    for e in sorted(entries):
-        if e.endswith("__old"):
-            final = e[: -len("__old")]
-            tmp = final + "__tmp"
-            if final in entries:
-                shutil.rmtree(f"{nodes_dir}/{e}", ignore_errors=True)
-            elif tmp in entries:
-                os.rename(f"{nodes_dir}/{tmp}", f"{nodes_dir}/{final}")
-                shutil.rmtree(f"{nodes_dir}/{e}", ignore_errors=True)
-            else:
-                os.rename(f"{nodes_dir}/{e}", f"{nodes_dir}/{final}")
-        elif e.endswith("__tmp"):
-            final = e[: -len("__tmp")]
-            if final in entries:
-                shutil.rmtree(f"{nodes_dir}/{e}", ignore_errors=True)
+def _load_nodes(spark: SparkSession, path: str, snap: dict) -> DataFrame:
+    return spark.read.schema(NODE_SCHEMA).parquet(
+        *(f"{path}/{d}" for d in snap["nodes"])
+    )
 
 
 def load_nodes(spark: SparkSession, path: str) -> DataFrame:
-    """Node rows of all COMPLETED batches (+ compaction generations).
-
-    **Generation shadowing**: a cell present in several generations resolves
-    to its NEWEST one (build batches are generation 0; compaction batches
-    order by their manifest id). This is what makes compaction crash-safe:
-    the manifest_compact append is the commit point, and un-GC'd older
-    copies of a rebuilt cell are simply shadowed until the directory rewrite
-    finishes (streaming.incremental.compact_index). The shadowing max() is
-    per-cell and Catalyst keeps it a single hash aggregate + join — at scale
-    the steady state has exactly one generation per cell, so the anti-join
-    side is tiny."""
-    recover_node_dirs(path)  # heal any crash-interrupted GC swap first
-    builds = [str(b) for b in sorted(completed_batches(spark, path))]
-    gens = compaction_batches(spark, path)
-    if not builds and not gens:
-        raise ValueError(
-            f"load_nodes: no completed batches or compaction generations at "
-            f"{path!r} — index empty or manifest missing"
-        )
-    parts = [
-        spark.read.parquet(f"{path}/nodes/batch={b}").withColumn(
-            "_gen", F.lit(0)
-        )
-        for b in builds
-    ]
-    for i, g in enumerate(gens):
-        parts.append(
-            spark.read.parquet(f"{path}/nodes/batch={g}").withColumn(
-                "_gen", F.lit(i + 1)
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    if not gens:
-        return out.drop("_gen")
-    newest = out.groupBy("cell").agg(F.max("_gen").alias("_gen"))
-    return out.join(newest, ["cell", "_gen"]).drop("_gen")
+    """Node rows of the visible index: the node dirs the newest snapshot
+    names (build batches, or the one generation the last compaction
+    wrote). Each cell lives in exactly one of them."""
+    return _load_nodes(spark, path, _pinned(path, "load_nodes"))
 
 
 def load_lineage(spark: SparkSession, path: str) -> DataFrame:
-    done = sorted(completed_batches(spark, path))
-    if not done:
-        raise ValueError(
-            f"load_lineage: no completed batches at {path!r} — index empty "
-            f"or manifest missing"
-        )
-    parts = [spark.read.parquet(f"{path}/lineage/batch={b}") for b in done]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    snap = _pinned(path, "load_lineage")
+    return spark.read.schema(LINEAGE_SCHEMA).parquet(
+        *(f"{path}/{d}" for d in snap["lineage"])
+    )
 
 
 def verify_index(spark: SparkSession, path: str) -> DataFrame:
     """Per-cell invariant check on the checkpointed trees (reference
     check_covering, tree.cpp:842-870, plus nesting): returns one row per cell
     with boolean flags; all-true == healthy index."""
-    res, _, metric_name = index_meta(spark, path)
-    nodes = load_nodes(spark, path)
-    metric = get_metric(metric_name)
+    snap = _pinned(path, "verify_index")
+    nodes = _load_nodes(spark, path, snap)
+    metric = get_metric(snap["metric"])
 
     def fn(key, pdf):
         import pandas as pd
@@ -428,12 +433,16 @@ def knn_probe_index(
     returns the exact top-k of its live records, and the ring guarantee
     and escalation above stay exact unchanged.
     """
-    return _knn_probe(probes, path, k, id_col=id_col, x_col=x_col, y_col=y_col)
+    snap = _pinned(path, "knn_probe_index")
+    return _knn_probe(
+        probes, path, snap, k, id_col=id_col, x_col=x_col, y_col=y_col
+    )
 
 
 def _knn_probe(
     probes: DataFrame,
     path: str,
+    snap: dict,
     k: int,
     *,
     id_col: str,
@@ -441,15 +450,16 @@ def _knn_probe(
     y_col: str,
     delta: tuple[DataFrame, DataFrame] | None = None,
 ) -> DataFrame:
-    """knn_probe_index over base ⊕ ``delta`` = (live inserts with id/x/y,
-    suppressed ids); ``None`` probes the stored trees alone."""
+    """knn_probe_index over the node dirs of the pinned snapshot ``snap`` ⊕
+    ``delta`` = (live inserts with id/x/y, suppressed ids); ``None`` probes
+    the stored trees alone."""
     from pyspark.sql import Window
 
     from metric_search_spark.functions.spatial import kring_cells_col
     from metric_search_spark.operators.joins import _guarantee_col
 
     spark = probes.sparkSession
-    res, _, metric_name = index_meta(spark, path)
+    res, metric_name = snap["res"], snap["metric"]
     # the ring-guarantee verdict compares the kth distance against a raw L2
     # edge distance on the 2-D coords (_guarantee_col): only metrics that
     # dominate L2 one-to-one make that sound. Reject anything else instead
@@ -463,7 +473,7 @@ def _knn_probe(
             f"operators.joins.knn_join with an explicit coord_scale"
         )
     metric = get_metric(metric_name)
-    base = load_nodes(spark, path)
+    base = _load_nodes(spark, path, snap)
     nodes = base.withColumn("kind", F.lit(_TREE))
     if delta is not None:
         live, suppress = delta

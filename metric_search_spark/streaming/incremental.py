@@ -15,7 +15,10 @@ per-cell tree index** (sources/index.py):
                        merges in; the ring guarantee stays exact unchanged
 - ``compact_index``  — applies the delta: ONLY cells touched by delta rows
                        are rebuilt (cell-scoped refresh, no global lock
-                       analog needed) and the delta is cleared
+                       analog needed), written with the untouched cells as
+                       one new generation, and ONE snapshot publish both
+                       swaps it in and marks the delta files it read as
+                       applied — rows appended meanwhile stay in the log
 
 - ``stream_into_index`` — Structured Streaming entry: readStream source →
   ``writeStream.foreachBatch(append_delta)`` with checkpointLocation, so a
@@ -29,7 +32,11 @@ compaction amortizes tree rebuilds per cell range.
 
 from __future__ import annotations
 
+import contextlib
+import os
+import shutil
 import time
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -37,12 +44,15 @@ from pyspark.sql import functions as F
 from metric_search_spark.functions.spatial import cell_from_xy_col
 from metric_search_spark.operators.joins import _clamp01
 from metric_search_spark.sources.index import (
+    _VERSION,
     NODE_SCHEMA,
     _build_kernel,
+    _data_files,
     _knn_probe,
-    completed_batches,
-    index_meta,
-    load_nodes,
+    _load_nodes,
+    _pinned,
+    _publish,
+    _snapshot,
 )
 
 __all__ = [
@@ -55,19 +65,6 @@ __all__ = [
 ]
 
 _DELTA_SCHEMA = "id long, x double, y double, op string, seq long"
-
-
-def _require_local(path: str) -> None:
-    """Compaction's delta-clear and GC directory swap are driver-local file
-    ops (shutil/os.rename); on an object-store path they would silently
-    no-op or corrupt mid-swap — refuse loudly instead. The append/probe
-    path is pure Spark IO and works anywhere; only maintenance is local."""
-    if "://" in path:
-        raise NotImplementedError(
-            f"compact_index/_clear_delta require a driver-local filesystem "
-            f"path, got {path!r}; object-store deployments need a "
-            f"Hadoop-FS-based maintenance variant"
-        )
 
 
 def append_delta(
@@ -102,19 +99,26 @@ def delete_ids(df: DataFrame, path: str, *, id_col: str = "id") -> None:
     ).write.mode("append").parquet(f"{path}/delta")
 
 
-def read_delta(spark: SparkSession, path: str) -> DataFrame | None:
-    from pyspark.errors import AnalysisException
-
+def _delta_files(path: str, snap: dict | None) -> list[str]:
+    """Names of the delta files not yet folded into ``snap``'s nodes."""
+    applied = set(snap["delta_applied"]) if snap else set()
     try:
-        df = spark.read.schema(_DELTA_SCHEMA).parquet(f"{path}/delta")
-        df.schema  # force path resolution now, inside the try
-        return df
-    except AnalysisException as e:
-        # ONLY path-missing means "no delta"; a permissions error or a
-        # corrupt footer must not silently resurrect deleted records
-        if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
-            return None
-        raise
+        names = _data_files(f"{path}/delta")
+    except FileNotFoundError:
+        return []
+    return [n for n in names if n not in applied]
+
+
+def _delta_frame(spark: SparkSession, path: str, files: list[str]) -> DataFrame:
+    return spark.read.schema(_DELTA_SCHEMA).parquet(
+        *(f"{path}/delta/{n}" for n in files)
+    )
+
+
+def read_delta(spark: SparkSession, path: str) -> DataFrame | None:
+    """The delta rows the newest snapshot has not applied, or None."""
+    files = _delta_files(path, _snapshot(path))
+    return _delta_frame(spark, path, files) if files else None
 
 
 def _effective_delta(delta: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -150,16 +154,20 @@ def knn_probe_live(
 ) -> DataFrame:
     """kNN over base-index ⊕ delta in ONE stored-index pass: the delta's
     live inserts and suppressed ids ride the per-cell cover-tree cogroup as
-    an overlay (sources.index.knn_probe_index documents the exactness)."""
-    delta = read_delta(probes.sparkSession, path)
+    an overlay (sources.index.knn_probe_index documents the exactness).
+    Pins one snapshot, then lists the delta files it has not applied."""
+    spark = probes.sparkSession
+    snap = _pinned(path, "knn_probe_live")
+    files = _delta_files(path, snap)
     return _knn_probe(
         probes,
         path,
+        snap,
         k,
         id_col=id_col,
         x_col=x_col,
         y_col=y_col,
-        delta=None if delta is None else _effective_delta(delta),
+        delta=_effective_delta(_delta_frame(spark, path, files)) if files else None,
     )
 
 
@@ -167,15 +175,15 @@ def compact_index(spark: SparkSession, path: str) -> int:
     """Apply the delta log: rebuild ONLY the cells it touches (cell-scoped
     refresh — the partition-parallel analog of the reference's lock-guarded
     in-place mutation). Returns the number of rebuilt cells."""
-    _require_local(path)
-    delta = read_delta(spark, path)
-    if delta is None:
+    snap = _pinned(path, "compact_index")
+    files = _delta_files(path, snap)
+    if not files:
         return 0
-    res, batches, metric_name = index_meta(spark, path)
+    res = snap["res"]
     # the same suppression knn_probe_live applies, so compaction lands the
     # identical record set
-    live, suppress = _effective_delta(delta)
-    nodes = load_nodes(spark, path)
+    live, suppress = _effective_delta(_delta_frame(spark, path, files))
+    nodes = _load_nodes(spark, path, snap)
 
     live_c = live.withColumn(
         "cell", cell_from_xy_col(_clamp01(F.col("x")), _clamp01(F.col("y")), res)
@@ -187,110 +195,78 @@ def compact_index(spark: SparkSession, path: str) -> int:
     touched = (
         live_c.select("cell").unionByName(stale_cells).distinct().persist()
     )
-    n_touched = touched.count()
-    if n_touched == 0:
-        _clear_delta(spark, path)
+    # crash-ordering — the snapshot publish is the ONE commit point:
+    #   1. write the new generation: every visible node row, touched cells
+    #      rebuilt (invisible — no snapshot names it yet)
+    #   2. publish snapshot N+1 naming only that generation and marking the
+    #      delta files read above as applied ← THE commit point: readers
+    #      switch to the rebuilt cells and stop reading those files at once
+    #   3. GC what neither N nor N+1 reads, so a reader pinned to N survives
+    #      this compaction. A crash before 2 leaves an orphan generation and
+    #      a crash in 3 leaves garbage; the next compaction's GC reclaims
+    #      both, and answers never change
+    try:
+        n_touched = touched.count()
+        new_nodes = snap["nodes"]
+        if n_touched:
+            # records of touched cells = (base payload − suppressed ids) ∪
+            # live rows — an UPSERT. Applying the same delta twice (say it
+            # is appended again after a commit) is idempotent: the rebuilt
+            # content is a pure function of (visible base state, delta), so
+            # live ids are suppressed from their OWN committed copies and
+            # re-added with identical coordinates instead of duplicated
+            base_records = (
+                nodes.join(touched, "cell", "left_semi")
+                .join(suppress, "id", "left_anti")
+                .select(
+                    "id", F.col("vx").alias("_x"), F.col("vy").alias("_y"), "cell"
+                )
+            )
+            # every live destination cell is in `touched` by construction
+            new_records = live_c.select(
+                "id", F.col("x").alias("_x"), F.col("y").alias("_y"), "cell"
+            )
+            rebuilt = (
+                base_records.unionByName(new_records)
+                .groupBy("cell")
+                .applyInPandas(_build_kernel(snap["metric"]), schema=NODE_SCHEMA)
+            )
+            gen = f"nodes/gen={snap['version'] + 1}-{uuid.uuid4().hex[:8]}"
+            nodes.join(touched, "cell", "left_anti").unionByName(
+                rebuilt
+            ).write.parquet(f"{path}/{gen}")
+            new_nodes = [gen]
+    finally:
         touched.unpersist()
-        return 0
-
-    # records of touched cells = (base payload − suppressed ids) ∪ live rows
-    # — an UPSERT. Re-application is idempotent because the rebuilt content
-    # is a pure function of (visible base state, delta): if a crash lands
-    # between the manifest commit and the delta clear, the next compaction
-    # re-derives the same record set against the already-shadowed cells
-    # (live ids are then suppressed from their OWN committed copies and
-    # re-added with identical coordinates) instead of duplicating rows
-    # (ADVICE r1, medium).
-    base_records = (
-        nodes.join(touched, "cell", "left_semi")
-        .join(suppress, "id", "left_anti")
-        .select("id", F.col("vx").alias("_x"), F.col("vy").alias("_y"), "cell")
-    )
-    # every live destination cell is in `touched` by construction
-    new_records = live_c.select(
-        "id", F.col("x").alias("_x"), F.col("y").alias("_y"), "cell"
-    )
-    all_records = base_records.unionByName(new_records)
-
-    kernel = _build_kernel(metric_name)
-    rebuilt = all_records.groupBy("cell").applyInPandas(kernel, schema=NODE_SCHEMA)
-
-    # crash-ordering (ADVICE r1, medium):
-    #   1. write the new generation's node rows (invisible — nothing lists it)
-    #   2. append the manifest_compact row  ← THE commit point: readers now
-    #      resolve touched cells to this generation (load_nodes shadows any
-    #      older copy per cell, sources/index.py)
-    #   3. clear the delta (re-application before this is idempotent, above)
-    #   4. GC: strip touched cells from older generations — pure space
-    #      reclamation; a crash mid-GC leaves shadowed rows, never data loss
-    # MONOTONIC generation id derived from the manifest itself (max existing
-    # numeric id + 1) — a wall-clock id could collide within one tick or
-    # regress under clock skew, silently inverting per-cell shadowing
-    from metric_search_spark.sources.index import compaction_batches
-
-    prev_gens = compaction_batches(spark, path)
-    gen = 1 + max(
-        (
-            int(x.removeprefix("compact"))
-            for x in prev_gens
-            if x.removeprefix("compact").isdigit()
-        ),
-        default=0,
-    )
-    b = f"compact{gen}"
-    rebuilt.write.mode("overwrite").parquet(f"{path}/nodes/batch={b}")
-    n_new = spark.read.parquet(f"{path}/nodes/batch={b}").count()
-    row = spark.createDataFrame(
-        [(b, batches, res, metric_name, n_new, 0.0, 0.0)],
-        "batch string, batches int, res int, metric string, n_nodes long, "
-        "wall_s double, rows_per_sec double",
-    )
-    # manifest batch ids are ints for build batches; compactions use a string
-    # id in a sibling manifest so completed_batches stays int-typed
-    row.write.mode("append").parquet(f"{path}/manifest_compact")
-    _clear_delta(spark, path)
-
-    # GC pass: rewrite every OLDER generation without the touched cells
-    olds = [str(x) for x in sorted(completed_batches(spark, path))]
-    olds += [x for x in compaction_batches(spark, path) if x != b]
-    for old in olds:
-        part = spark.read.parquet(f"{path}/nodes/batch={old}")
-        kept = part.join(touched, "cell", "left_anti")
-        kept.write.mode("overwrite").parquet(f"{path}/nodes/batch={old}__tmp")
-    for old in olds:
-        _replace_dir(f"{path}/nodes/batch={old}__tmp", f"{path}/nodes/batch={old}")
-    # drop any cached file listings for the replaced directories
-    spark.catalog.refreshByPath(f"{path}/nodes")
-    for old in olds:
-        spark.catalog.refreshByPath(f"{path}/nodes/batch={old}")
-    touched.unpersist()
+    new = {
+        **snap,
+        "version": snap["version"] + 1,
+        "nodes": new_nodes,
+        # files applied earlier stay listed until the GC below deletes them
+        "delta_applied": files
+        + [n for n in snap["delta_applied"] if os.path.exists(f"{path}/delta/{n}")],
+    }
+    _publish(path, new)
+    _gc(path, snap, new)
     return n_touched
 
 
-def _replace_dir(src: str, dst: str) -> None:
-    """Two-rename swap matching sources.index.recover_node_dirs: dst→__old,
-    src→dst, drop __old. A crash at ANY intermediate point leaves a state
-    recover_node_dirs heals on the next load: __old + dst present → drop
-    __old; __old alone + __tmp → promote __tmp; __tmp + dst → drop __tmp
-    (stale shadowed rows stay shadowed until a later GC reclaims them).
-    The previous rmtree(dst)+move had a window where the ONLY live copy of
-    a generation was gone."""
-    import os
-    import shutil
-
-    old = f"{dst}__old"
-    shutil.rmtree(old, ignore_errors=True)
-    if os.path.exists(dst):
-        os.rename(dst, old)
-    os.rename(src, dst)
-    shutil.rmtree(old, ignore_errors=True)
-
-
-def _clear_delta(spark: SparkSession, path: str) -> None:
-    import shutil
-
-    _require_local(path)
-    shutil.rmtree(f"{path}/delta", ignore_errors=True)
+def _gc(path: str, prev: dict, new: dict) -> None:
+    """Delete what neither snapshot ``prev`` nor ``new`` reads: other node
+    dirs, the delta files ``prev`` had already applied, and older
+    snapshots."""
+    keep = set(prev["nodes"]) | set(new["nodes"])
+    for d in os.listdir(f"{path}/nodes"):
+        if f"nodes/{d}" not in keep:
+            shutil.rmtree(f"{path}/nodes/{d}")
+    for n in prev["delta_applied"]:
+        for f in (n, f".{n}.crc"):
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(f"{path}/delta/{f}")
+    for f in os.listdir(f"{path}/snapshot"):
+        m = _VERSION.fullmatch(f)
+        if m and int(m[1]) < prev["version"]:
+            os.remove(f"{path}/snapshot/{f}")
 
 
 def stream_into_index(

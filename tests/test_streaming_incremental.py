@@ -3,12 +3,18 @@ ingestion (resumable micro-batch appends)."""
 
 from __future__ import annotations
 
+import os
+import shutil
+import threading
+import uuid
+
 import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from metric_search_spark.sources.index import build_index, load_nodes, verify_index
+from metric_search_spark.streaming import incremental
 from metric_search_spark.streaming.incremental import (
     append_delta,
     compact_index,
@@ -78,10 +84,10 @@ def test_delta_insert_delete_probe_compact(spark, tmp_path):
 
 
 def test_compaction_commit_point_and_idempotent_reapply(spark, tmp_path):
-    """Crash-atomicity contract (ADVICE r1, medium): after the
-    manifest_compact append (the commit point) the index must already be
-    consistent — BEFORE old generations are GC'd (shadowing) and even if the
-    delta log survives and is re-applied (idempotence)."""
+    """Crash-atomicity contract (ADVICE r1, medium): after the snapshot
+    publish (the commit point) the index must already be consistent —
+    BEFORE old generations are GC'd and even if the same delta is applied
+    again (idempotence)."""
     pdf, path = _base(spark, tmp_path, n=150)
     rng = np.random.default_rng(31)
     new = pd.DataFrame(
@@ -95,8 +101,8 @@ def test_compaction_commit_point_and_idempotent_reapply(spark, tmp_path):
     effective = pd.concat([pdf.iloc[10:], new]).reset_index(drop=True)
     assert load_nodes(spark, path).count() == len(effective)
 
-    # simulate the crash window: delta survives the commit → re-append the
-    # SAME delta and recompact; content must not duplicate
+    # the same delta applied twice → re-append the SAME delta and
+    # recompact; content must not duplicate
     append_delta(spark.createDataFrame(new), path)
     delete_ids(
         spark.createDataFrame(pd.DataFrame({"id": pdf["id"].iloc[:10]})), path
@@ -109,9 +115,8 @@ def test_compaction_commit_point_and_idempotent_reapply(spark, tmp_path):
     health = verify_index(spark, path).toPandas()
     assert health["covering_ok"].all()
 
-    # shadowing: a new generation with a stale older copy still un-GC'd —
-    # emulate by appending another insert batch and compacting; answers must
-    # equal brute force on the final effective set
+    # one more generation on top: answers must equal brute force on the
+    # final effective set
     more = pd.DataFrame(
         {"id": np.arange(600, 610), "x": rng.random(10), "y": rng.random(10)}
     )
@@ -317,82 +322,222 @@ def test_update_and_reinsert_semantics(spark, tmp_path):
     assert health["covering_ok"].all()
 
 
-def test_gc_swap_crash_recovery(spark, tmp_path):
-    """recover_node_dirs heals every intermediate state of _replace_dir's
-    two-rename GC swap; answers and node counts are unchanged after each
-    simulated crash."""
-    import os
-    import shutil
+def _cycle(spark, path, rng, ids, compact=True):
+    """Append rows ``ids`` at random coords (then compact); returns them."""
+    rows = pd.DataFrame({"id": ids, "x": rng.random(len(ids)), "y": rng.random(len(ids))})
+    append_delta(spark.createDataFrame(rows), path)
+    if compact:
+        compact_index(spark, path)
+    return rows
 
-    from metric_search_spark.sources.index import recover_node_dirs
 
+def _node_dirs(path):
+    return sorted(os.listdir(f"{path}/nodes"))
+
+
+def test_crash_after_generation_write_before_publish(spark, tmp_path, monkeypatch):
+    """A compaction that dies after writing its generation but before the
+    snapshot publish changes no answer; the next compaction's GC reclaims
+    the orphan generation."""
     pdf, path = _base(spark, tmp_path, n=150)
     rng = np.random.default_rng(66)
-    new = pd.DataFrame({"id": np.arange(700, 720), "x": rng.random(20), "y": rng.random(20)})
-    append_delta(spark.createDataFrame(new), path)
-    compact_index(spark, path)
-    n_total = load_nodes(spark, path).count()
-    nodes_dir = f"{path}/nodes"
-    victim = f"{nodes_dir}/batch=0"
+    dirs_before = _node_dirs(path)
 
-    # state A: crash between rename(dst→old) and rename(tmp→dst), no tmp
-    # written yet — the ORIGINAL copy must come back
-    os.rename(victim, f"{victim}__old")
-    recover_node_dirs(path)
-    assert os.path.isdir(victim) and not os.path.isdir(f"{victim}__old")
-    assert load_nodes(spark, path).count() == n_total
+    def crash(path, snap):
+        raise RuntimeError("crash before publish")
 
-    # state B: crash after the GC rewrite but before any rename — a stray
-    # __tmp with the final present is dropped
-    shutil.copytree(victim, f"{victim}__tmp")
-    recover_node_dirs(path)
-    assert not os.path.isdir(f"{victim}__tmp")
-    assert load_nodes(spark, path).count() == n_total
-
-    # state C: crash between the two renames WITH the tmp present — the new
-    # (GC'd) copy is promoted
-    shutil.copytree(victim, f"{victim}__tmp")
-    os.rename(victim, f"{victim}__old")
-    recover_node_dirs(path)
-    assert os.path.isdir(victim)
-    assert not os.path.isdir(f"{victim}__old") and not os.path.isdir(f"{victim}__tmp")
-    spark.catalog.refreshByPath(nodes_dir)
-    assert load_nodes(spark, path).count() == n_total
-
-    # state D: crash after rename(tmp→dst) but before dropping __old —
-    # post-swap garbage is deleted, dst untouched
-    shutil.copytree(victim, f"{victim}__old")
-    recover_node_dirs(path)
-    assert not os.path.isdir(f"{victim}__old")
-    assert load_nodes(spark, path).count() == n_total
-
-
-def test_generations_monotonic_and_numeric_order(spark, tmp_path):
-    """Generation ids come from the manifest (max+1), and compaction_batches
-    orders them NUMERICALLY — 'compact10' must shadow 'compact9', which
-    lexicographic name order would invert."""
-    from metric_search_spark.sources.index import compaction_batches
-
-    pdf, path = _base(spark, tmp_path, n=80)
-    rng = np.random.default_rng(77)
-    for i in range(2):
-        rows = pd.DataFrame(
-            {"id": [900 + i], "x": [rng.random()], "y": [rng.random()]}
-        )
-        append_delta(spark.createDataFrame(rows), path)
+    monkeypatch.setattr(incremental, "_publish", crash)
+    new = _cycle(spark, path, rng, np.arange(700, 720), compact=False)
+    with pytest.raises(RuntimeError, match="crash before publish"):
         compact_index(spark, path)
-    gens = compaction_batches(spark, path)
-    assert gens == ["compact1", "compact2"]
+    orphans = set(_node_dirs(path)) - set(dirs_before)
+    assert len(orphans) == 1, orphans
+    effective = pd.concat([pdf, new]).reset_index(drop=True)
+    assert read_delta(spark, path).count() == len(new)  # nothing applied
+    _assert_probe_exact(spark, path, effective, effective.sample(15, random_state=2), 4)
 
-    # numeric-vs-lexicographic pin: seed manifest rows named compact9/10
-    extra = spark.createDataFrame(
-        [(f"compact{g}", 2, 2, "euclidean", 0, 0.0, 0.0) for g in (10, 9)],
-        "batch string, batches int, res int, metric string, n_nodes long, "
-        "wall_s double, rows_per_sec double",
-    )
-    extra.write.mode("append").parquet(f"{path}/manifest_compact")
-    gens = compaction_batches(spark, path)
-    assert gens == ["compact1", "compact2", "compact9", "compact10"]
+    monkeypatch.undo()
+    assert compact_index(spark, path) > 0
+    assert not orphans & set(_node_dirs(path))
+    assert read_delta(spark, path) is None
+    _assert_probe_exact(spark, path, effective, effective.sample(15, random_state=2), 4)
+
+
+def test_crash_mid_gc(spark, tmp_path, monkeypatch):
+    """A compaction that dies halfway through its GC (one stale node dir
+    deleted, the rest left) changes no answer; the next GC finishes."""
+    pdf, path = _base(spark, tmp_path, n=150)
+    rng = np.random.default_rng(67)
+    first = _cycle(spark, path, rng, np.arange(700, 710))
+    real_rmtree = shutil.rmtree
+    calls = []
+
+    def rmtree_then_crash(p, *a, **kw):
+        calls.append(p)
+        if len(calls) > 1:
+            raise RuntimeError("crash mid-GC")
+        real_rmtree(p, *a, **kw)
+
+    second = _cycle(spark, path, rng, np.arange(710, 720), compact=False)
+    monkeypatch.setattr(shutil, "rmtree", rmtree_then_crash)
+    with pytest.raises(RuntimeError, match="crash mid-GC"):
+        compact_index(spark, path)
+    monkeypatch.undo()
+    assert len(calls) == 2  # the two build batches were due for deletion
+    effective = pd.concat([pdf, first, second]).reset_index(drop=True)
+    assert read_delta(spark, path) is None  # the publish had committed
+    probes = effective.sample(15, random_state=4)
+    _assert_probe_exact(spark, path, effective, probes, 4)
+
+    third = _cycle(spark, path, rng, np.arange(720, 725))
+    assert len(_node_dirs(path)) == 2
+    effective = pd.concat([effective, third]).reset_index(drop=True)
+    _assert_probe_exact(spark, path, effective, probes, 4)
+
+
+def test_snapshot_versions_order_numerically(spark, tmp_path):
+    """Eleven build batches publish v1..v11: the reader must take v11, not
+    the lexicographically larger v9, and a compaction publishes v12 and
+    keeps only the snapshots its GC rule needs."""
+    from metric_search_spark.sources.index import completed_batches, index_meta
+
+    rng = np.random.default_rng(77)
+    pdf = pd.DataFrame({"id": np.arange(80), "x": rng.random(80), "y": rng.random(80)})
+    path = str(tmp_path / "idx")
+    build_index(spark.createDataFrame(pdf), path, res=2, batches=11)
+    assert set(os.listdir(f"{path}/snapshot")) == {f"v{i}.json" for i in range(1, 12)}
+    assert completed_batches(spark, path) == set(range(11))
+    assert index_meta(spark, path) == (2, 11, "euclidean")
+    new = _cycle(spark, path, rng, np.arange(900, 905))
+    assert sorted(os.listdir(f"{path}/snapshot")) == ["v11.json", "v12.json"]
+    assert completed_batches(spark, path) == set(range(11))
+    effective = pd.concat([pdf, new]).reset_index(drop=True)
+    assert load_nodes(spark, path).count() == len(effective)
+
+
+def test_compaction_keeps_rows_appended_while_it_runs(spark, tmp_path, monkeypatch):
+    """A row appended after compaction listed the delta is not applied by
+    that compaction and must not be cleared with the rows it did apply."""
+    pdf, path = _base(spark, tmp_path, n=150)
+    rng = np.random.default_rng(68)
+    new = _cycle(spark, path, rng, np.arange(700, 710), compact=False)
+    late = pd.DataFrame({"id": [9999], "x": [0.5], "y": [0.5]})
+    real = incremental._effective_delta
+
+    def append_then_apply(delta):
+        append_delta(spark.createDataFrame(late), path)
+        return real(delta)
+
+    monkeypatch.setattr(incremental, "_effective_delta", append_then_apply)
+    compact_index(spark, path)
+    monkeypatch.undo()
+    left = read_delta(spark, path).toPandas()
+    assert left["id"].tolist() == [9999]
+    effective = pd.concat([pdf, new, late]).reset_index(drop=True)
+    probes = pd.DataFrame({"id": [9001, 9002], "x": [0.5, 0.52], "y": [0.5, 0.49]})
+    _assert_probe_exact(spark, path, effective, probes, 3)
+
+
+def test_probe_pinned_before_compaction_survives_it(spark, tmp_path, monkeypatch):
+    """A knn_probe_live that pinned snapshot N runs to completion while
+    compact_index publishes N+1 and GCs, and matches brute force."""
+    pdf, path = _base(spark, tmp_path, n=150)
+    rng = np.random.default_rng(69)
+    first = _cycle(spark, path, rng, np.arange(700, 710))
+    delete_ids(spark.createDataFrame(pd.DataFrame({"id": pdf["id"].iloc[:5]})), path)
+    second = _cycle(spark, path, rng, np.arange(710, 720), compact=False)
+    effective = pd.concat([pdf.iloc[5:], first, second]).reset_index(drop=True)
+    probes = effective.sample(15, random_state=6)
+    real = incremental._effective_delta
+    pinned, compacted = threading.Event(), threading.Event()
+    box = {}
+
+    def hold_probe(delta):
+        if threading.current_thread().name == "probe":
+            pinned.set()  # snapshot pinned and delta listed
+            assert compacted.wait(300)
+        return real(delta)
+
+    def probe():
+        try:
+            box["got"] = knn_probe_live(spark.createDataFrame(probes), path, k=4).toPandas()
+        except Exception as e:  # noqa: BLE001 — re-raised on the main thread
+            box["err"] = e
+
+    monkeypatch.setattr(incremental, "_effective_delta", hold_probe)
+    t = threading.Thread(target=probe, name="probe")
+    t.start()
+    try:
+        assert pinned.wait(300)
+        dirs_before = set(_node_dirs(path))
+        assert compact_index(spark, path) > 0
+        assert dirs_before - set(_node_dirs(path))  # the GC deleted something
+    finally:
+        compacted.set()
+        t.join(300)
+    assert not t.is_alive()
+    if "err" in box:
+        raise box["err"]
+    want = _brute(effective, probes, 4)
+    for qid, grp in box["got"].sort_values(["query_id", "rank"]).groupby("query_id"):
+        assert list(grp["neighbor_id"]) == want[int(qid)], qid
+
+
+def test_unreadable_snapshot_raises(spark, tmp_path):
+    """A truncated newest snapshot must raise — read as "no index" or as
+    an older version it would bring deleted rows back."""
+    pdf, path = _base(spark, tmp_path, n=60)
+    delete_ids(spark.createDataFrame(pd.DataFrame({"id": [1, 2]})), path)
+    newest = max(os.listdir(f"{path}/snapshot"), key=lambda f: int(f[1:-5]))
+    f = f"{path}/snapshot/{newest}"
+    with open(f, "rb") as fh:
+        data = fh.read()
+    with open(f, "wb") as fh:
+        fh.write(data[: len(data) // 2])
+    probes = spark.createDataFrame(pdf.iloc[:3])
+    for call in (
+        lambda: load_nodes(spark, path),
+        lambda: knn_probe_live(probes, path, k=3),
+        lambda: compact_index(spark, path),
+    ):
+        with pytest.raises(RuntimeError, match="unreadable index snapshot"):
+            call()
+
+
+def test_never_built_path_raises(spark, tmp_path):
+    path = str(tmp_path / "never_built")
+    probes = spark.createDataFrame(pd.DataFrame({"id": [1], "x": [0.5], "y": [0.5]}))
+    for call in (
+        lambda: load_nodes(spark, path),
+        lambda: knn_probe_live(probes, path, k=3),
+        lambda: compact_index(spark, path),
+    ):
+        with pytest.raises(ValueError, match="no completed batches"):
+            call()
+
+
+def test_clean_probe_jobs_flat_across_compactions(spark, tmp_path):
+    """Each compaction replaces the visible index with one generation, so
+    a clean probe costs the same Spark jobs after the 3rd compaction as
+    after the 1st, and at most two node generations stay on disk."""
+    pdf, path = _base(spark, tmp_path, n=300)
+    rng = np.random.default_rng(70)
+    sc = spark.sparkContext
+    probes = spark.createDataFrame(pdf.iloc[:10])
+    jobs = []
+    for cycle in range(3):
+        _cycle(spark, path, rng, np.arange(800 + 10 * cycle, 810 + 10 * cycle))
+        group = f"clean-probe-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "clean knn_probe_live")
+        try:
+            knn_probe_live(probes, path, k=3).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+        # the build batches are one generation, each compaction one more
+        gens = {d if d.startswith("gen=") else "build" for d in _node_dirs(path)}
+        assert len(gens) <= 2, gens
+    assert jobs[2] == jobs[0], jobs
 
 
 def test_compact_refuses_object_store_paths(spark):
