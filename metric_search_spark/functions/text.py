@@ -783,6 +783,8 @@ def bpe_merges(
             break
         l, r, c = top[0]["l"], top[0]["r"], int(top[0]["c"])
         out_rows.append((rank, l, r, c))
+        if rank == n_merges:  # the pair table and words are never read again
+            break
         pat, rep = l + sep + r, l + r
         # exact delta: only words containing the merged bigram change any
         # pair count — recount their pairs before (−cnt) and after (+cnt)

@@ -14,13 +14,14 @@ stage 1 (coarse prune, relational): both sides are encoded to Morton quadkey
     buckets and the halo fans out to each bucket; AQE is the safety net.
 
 stage 2 (fine refinement, Arrow kernel): per (cell, salt) group an
-    ``applyInPandas`` kernel computes each probe's exact top-k — either a
-    vectorized all-pairs numpy kernel ("flat") or a per-cell cover tree with
-    the reference's triangle-inequality pruning ("covertree",
-    core/covertree.py). Because a probe lives in exactly one group, the
-    kernel's ranked output IS the final answer — no global window shuffle on
-    this path (the reference's bounded sorted kNN list, tree.cpp:664-677,
-    lives inside the kernel).
+    ``applyInPandas`` kernel computes each probe's exact top-k with one
+    vectorized all-pairs numpy kernel (``_flat_topk``; 2-D distances are
+    ``sqrt(dx*dx + dy*dy)``). The stored-index probe
+    (sources.index.knn_probe_index) ranks its cells with the same kernel.
+    Because a probe lives in exactly one group, the kernel's ranked output
+    IS the final answer — no global window shuffle on this path (the
+    reference's bounded sorted kNN list, tree.cpp:664-677, lives inside the
+    kernel).
 
 Exactness across cell boundaries (the correctness crux the single-tree
 reference never faced): a probe's result is provably exact when its kth
@@ -67,7 +68,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from metric_search_spark.cells import cell_size
-from metric_search_spark.core.covertree import CoverTree
 from metric_search_spark.core.metrics import Metric, get_metric
 from metric_search_spark.functions.spatial import cell_from_xy_col, kring_cells_col
 
@@ -159,24 +159,6 @@ def _flat_topk(
         all_idx[s : s + chunk] = np.take_along_axis(part, order, axis=1)
         all_d[s : s + chunk] = np.take_along_axis(pd_, order, axis=1)
     return all_idx, all_d
-
-
-def _covertree_topk(
-    metric: Metric, P: np.ndarray, B: np.ndarray, k: int
-) -> tuple[np.ndarray, np.ndarray]:
-    """Per-group top-k via a local cover tree with the reference's pruning
-    (exact 'safe' bound — core/covertree.py)."""
-    tree = CoverTree(metric)
-    tree.insert_batch(list(B))
-    kk = min(k, B.shape[0])
-    idx = np.empty((P.shape[0], kk), dtype=np.int64)
-    d = np.empty((P.shape[0], kk), dtype=np.float64)
-    for i in range(P.shape[0]):
-        res = tree.knn(P[i], k=kk, prune="safe")
-        # node handle == insertion position == build row position
-        idx[i] = [n for n, _ in res]
-        d[i] = [dd for _, dd in res]
-    return idx, d
 
 
 def _clamp01(c: Column) -> Column:
@@ -339,7 +321,6 @@ def _ranked_group_topk_arrays(
     build_halo: DataFrame,
     metric: Metric,
     k: int,
-    kernel: str,
     qid_type: str,
     bid_type: str,
 ) -> DataFrame:
@@ -372,10 +353,7 @@ def _ranked_group_topk_arrays(
         bids = raw_ids[order]
         B = raw_B[order]
         pids, P = _unpack_probes(probe_pdf)
-        if kernel == "covertree":
-            idx, d = _covertree_topk(metric, P, B, k)
-        else:
-            idx, d = _flat_topk(metric, P, B, k)
+        idx, d = _flat_topk(metric, P, B, k)
         nid_rows = bids[idx]
         # .tolist(): plain python scalars — Arrow's NumPyConverter refuses
         # numpy string scalars inside list values
@@ -454,7 +432,6 @@ def _ranked_group_topk(
     build_halo: DataFrame,
     metric: Metric,
     k: int,
-    kernel: str,
     qid_type: str,
     bid_type: str,
 ) -> DataFrame:
@@ -473,10 +450,7 @@ def _ranked_group_topk(
         bids = raw_ids[order]
         B = raw_B[order]
         P = _group_matrix(probe_pdf)
-        if kernel == "covertree":
-            idx, d = _covertree_topk(metric, P, B, k)
-        else:
-            idx, d = _flat_topk(metric, P, B, k)
+        idx, d = _flat_topk(metric, P, B, k)
         kk = idx.shape[1]
         return pd.DataFrame(
             {
@@ -531,12 +505,12 @@ def _partial_topk(
     build_salted: DataFrame,
     metric: Metric,
     k: int,
-    kernel: str,
     qid_type: str,
     bid_type: str,
 ) -> DataFrame:
     """Escalation-path kernel: per-(cell, salt) partial top-k rows
-    (≤ k per probe per group); merged by the caller's window."""
+    (≤ k per probe per group); merged by the caller's window. Also ranks
+    each cell of the stored index (sources.index._knn_probe)."""
     import pandas as pd
 
     out_schema = f"query_id {qid_type}, neighbor_id {bid_type}, dist double"
@@ -550,10 +524,7 @@ def _partial_topk(
         bids = raw_ids[order]
         B = raw_B[order]
         P = _group_matrix(probe_pdf)
-        if kernel == "covertree":
-            idx, d = _covertree_topk(metric, P, B, k)
-        else:
-            idx, d = _flat_topk(metric, P, B, k)
+        idx, d = _flat_topk(metric, P, B, k)
         kk = idx.shape[1]
         return pd.DataFrame(
             {
@@ -576,7 +547,6 @@ def _grid_knn(
     n_build: int,
     metric: Metric,
     k: int,
-    kernel: str,
     qid_type: str,
     bid_type: str,
     chunk_rows: int,
@@ -623,10 +593,10 @@ def _grid_knn(
         # every probe sees the whole build side in its single group — the
         # kernel's ranked output is final, no window
         return _ranked_group_topk(
-            probes_g, build_g, metric, k, kernel, qid_type, bid_type
+            probes_g, build_g, metric, k, qid_type, bid_type
         )
     partial = _partial_topk(
-        probes_g, build_g, metric, k, kernel, qid_type, bid_type
+        probes_g, build_g, metric, k, qid_type, bid_type
     )
     w = Window.partitionBy("query_id").orderBy("dist", "neighbor_id")
     return partial.withColumn("rank", F.row_number().over(w)).where(
@@ -648,7 +618,6 @@ def knn_join(
     res: int | None = None,
     target_per_cell: int = 256,
     salt_threshold: int | None = None,
-    kernel: str = "flat",
     coord_scale: float = 1.0,
     max_rounds: int = 12,
     grid_chunk_rows: int = 8192,
@@ -704,7 +673,6 @@ def knn_join(
                 n_build,
                 metric,
                 k,
-                kernel,
                 qid_type,
                 bid_type,
                 grid_chunk_rows,
@@ -722,7 +690,7 @@ def knn_join(
         probes_p = _pack_probes(probes_s)
         halo = _halo_build_packed(build_c, salts_p, res, 1)
         packed = _ranked_group_topk_arrays(
-            probes_p, halo, metric, k, kernel, qid_type, bid_type
+            probes_p, halo, metric, k, qid_type, bid_type
         ).persist()
         to_unpersist.append(packed)
         ranked = _explode_ranked(packed)
@@ -787,7 +755,7 @@ def knn_join(
                     build_cells,
                 )
                 partial = _partial_topk(
-                    cand, build_salted, metric, k, kernel, qid_type, bid_type
+                    cand, build_salted, metric, k, qid_type, bid_type
                 )
                 topk = (
                     partial.withColumn("rank", F.row_number().over(w))

@@ -13,13 +13,11 @@ Layout under ``path/``:
     nodes/gen=<v>-<hex>/...      one compaction generation: every visible
                                  node row as of snapshot v
                                  (streaming.incremental.compact_index)
-    lineage/batch=<i>/...        per-cell build metrics (rows, nodes,
-                                 max_level, build_ms)
     snapshot/v<N>.json           index metadata, one file per version: res,
                                  batches, metric, the completed build batches
-                                 (wall_s, n_nodes), the lineage dirs, the node
-                                 dirs that make up the visible index and the
-                                 delta files already folded into them
+                                 (wall_s, n_nodes), the node dirs that make up
+                                 the visible index and the delta files already
+                                 folded into them
 
 **Snapshots**: readers pin the newest version (versions order numerically)
 with a plain driver-side file read — no Spark job — and never rename or
@@ -33,8 +31,9 @@ contiguous Morton prefix ranges; each batch commits atomically (Spark job
 commit) and then publishes a snapshot that adds it — the publish is the
 batch's commit point. A killed job resumes by skipping the batches the
 newest snapshot lists — only incomplete cell ranges are rebuilt.
-Per-partition lineage + throughput metrics are first-class outputs, not
-logs.
+Per-cell lineage (``load_lineage``) is derived from the visible node rows
+and each batch's build wall time in the snapshot, so it stays true after
+every compaction.
 """
 
 from __future__ import annotations
@@ -47,23 +46,22 @@ import time
 import uuid
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from metric_search_spark.core.covertree import CoverTree
 from metric_search_spark.core.metrics import get_metric
-from metric_search_spark.functions.spatial import with_xy_cell
-from metric_search_spark.operators.joins import _clamp01
+from metric_search_spark.functions.spatial import kring_cells_col, with_xy_cell
+from metric_search_spark.operators.joins import (
+    _clamp01,
+    _guarantee_col,
+    _partial_topk,
+)
 
 NODE_SCHEMA = (
     "cell long, node_id int, parent_id int, child_pos int, level int, "
     "parent_dist double, sub_radius double, rec_id long, id long, "
     "vx double, vy double"
-)
-
-LINEAGE_SCHEMA = (
-    "cell long, n_nodes long, n_rows long, max_level int, min_level int, "
-    "build_ms double"
 )
 
 _VERSION = re.compile(r"v(\d+)\.json")
@@ -172,7 +170,7 @@ def build_index(
     ).withColumn("batch", _batch_col(F.col("cell"), res, batches))
 
     snap = _snapshot(path) or {
-        "version": 0, "built": [], "lineage": [], "nodes": [], "delta_applied": []
+        "version": 0, "built": [], "nodes": [], "delta_applied": []
     }
     done = {e["batch"] for e in snap["built"]}
     todo = [b for b in range(batches) if b not in done]
@@ -203,11 +201,6 @@ def build_index(
         part = staged.where(F.col("batch") == b)
         nodes = part.groupBy("cell").applyInPandas(kernel, schema=NODE_SCHEMA)
         nodes.write.mode("overwrite").parquet(f"{path}/nodes/batch={b}")
-        built = spark.read.schema(NODE_SCHEMA).parquet(f"{path}/nodes/batch={b}")
-        lineage = _lineage_from_nodes(built).withColumn(
-            "build_ms", F.lit(round((time.time() - t0) * 1000.0, 1))
-        )
-        lineage.write.mode("overwrite").parquet(f"{path}/lineage/batch={b}")
         wall = time.time() - t0
         n_nodes = _parquet_rows(f"{path}/nodes/batch={b}")
         snap = {
@@ -218,7 +211,6 @@ def build_index(
             "metric": metric,
             "built": snap["built"]
             + [{"batch": int(b), "wall_s": round(wall, 3), "n_nodes": n_nodes}],
-            "lineage": snap["lineage"] + [f"lineage/batch={b}"],
             "nodes": snap["nodes"] + [f"nodes/batch={b}"],
         }
         _publish(path, snap)  # the commit point for the batch
@@ -331,9 +323,17 @@ def load_nodes(spark: SparkSession, path: str) -> DataFrame:
 
 
 def load_lineage(spark: SparkSession, path: str) -> DataFrame:
+    """Per-cell metrics of the visible index (cell, n_nodes, n_rows,
+    max_level, min_level, build_ms), derived from its node rows; build_ms
+    is the wall time of the build batch that holds the cell (the
+    snapshot's ``built[].wall_s``, looked up by ``_batch_col(cell)``)."""
     snap = _pinned(path, "load_lineage")
-    return spark.read.schema(LINEAGE_SCHEMA).parquet(
-        *(f"{path}/{d}" for d in snap["lineage"])
+    build_ms = F.create_map(
+        *(F.lit(v) for e in snap["built"] for v in (e["batch"], e["wall_s"] * 1e3))
+    )
+    batch = _batch_col(F.col("cell"), snap["res"], snap["batches"])
+    return _lineage_from_nodes(_load_nodes(spark, path, snap)).withColumn(
+        "build_ms", build_ms[batch]
     )
 
 
@@ -382,28 +382,40 @@ def _tree_from_pdf(pdf, metric) -> CoverTree:
     return CoverTree.from_rows(rows, metric)
 
 
-# node-side row kinds in the probe cogroup: a stored tree node, a live delta
-# insert, or a suppressed id (a tombstone, or the stale base copy of an update)
-_TREE, _INSERT, _SUPPRESSED = 0, 1, 2
-
-
-def _delta_overlay(
-    nodes: DataFrame, live: DataFrame, suppress: DataFrame, res: int
-) -> DataFrame:
-    """Per-cell overlay rows for the probe cogroup: each live insert keyed by
-    its clamped cell, and each stored copy of a suppressed id keyed by the
-    cell its current base tree holds it in (a broadcast semi-join, so a
-    cell's overlay counts exactly the tree rows it must drop)."""
-    inserts = with_xy_cell(
-        live.select("id", F.col("x").alias("vx"), F.col("y").alias("vy")),
-        _clamp01(F.col("vx")),
-        _clamp01(F.col("vy")),
+def _inserts(live: DataFrame, res: int) -> DataFrame:
+    """Live delta inserts (id, x, y) as (_cell, _id, _x, _y), keyed by their
+    clamped cell — the cell build_index would give them."""
+    return with_xy_cell(
+        live.select(
+            F.col("id").alias("_id"), F.col("x").alias("_x"), F.col("y").alias("_y")
+        ),
+        _clamp01(F.col("_x")),
+        _clamp01(F.col("_y")),
         res,
-    ).withColumn("kind", F.lit(_INSERT))
-    dropped = nodes.join(F.broadcast(suppress), "id", "left_semi").select(
-        "cell", "id", F.lit(_SUPPRESSED).alias("kind")
+        out="_cell",
     )
-    return inserts.unionByName(dropped, allowMissingColumns=True)
+
+
+def _visible(
+    nodes: DataFrame, res: int, delta: tuple[DataFrame, DataFrame] | None
+) -> DataFrame:
+    """The visible record set as (_cell, _id, _x, _y): stored node rows ⋉̸
+    the delta's suppressed ids, ∪ its live inserts keyed by their clamped
+    cell. ``delta`` = (live inserts with id/x/y, suppressed ids), or None
+    for the stored rows alone. The probe ranks this set and compaction
+    rebuilds its touched cells from it, so both see the same records."""
+    stored = nodes.select(
+        F.col("cell").alias("_cell"),
+        F.col("id").alias("_id"),
+        F.col("vx").alias("_x"),
+        F.col("vy").alias("_y"),
+    )
+    if delta is None:
+        return stored
+    live, suppress = delta
+    return stored.join(
+        F.broadcast(suppress.select(F.col("id").alias("_id"))), "_id", "left_anti"
+    ).unionByName(_inserts(live, res))
 
 
 def knn_probe_index(
@@ -416,22 +428,19 @@ def knn_probe_index(
     y_col: str = "y",
 ) -> DataFrame:
     """kNN against the CHECKPOINTED index: probes route to their cell's
-    k-ring of stored trees (reconstructed per partition from the node table),
-    each tree answers with the reference's knn_ descent
-    (core/covertree.py:knn, pruning per tree.cpp:658-690), and a window
-    merges the per-tree lists. Returns (query_id, neighbor_id, dist, rank).
+    k-ring of stored cells, each cell ranks its records with knn_join's
+    flat kernel (operators.joins._partial_topk, distances
+    ``sqrt(dx*dx + dy*dy)``), and a window merges the per-cell lists.
+    Returns (query_id, neighbor_id, dist, rank).
 
     Exactness: same ring-guarantee logic as joins.knn_join; unresolved
-    probes re-run with the ring doubled against the same stored trees.
+    probes re-run with the ring doubled against the same stored cells.
 
-    ``streaming.incremental.knn_probe_live`` runs this same pass with a
-    delta-log overlay (``_delta_overlay``) on the node side of the cogroup:
-    a cell holding ``s`` suppressed rows asks its tree for ``k + s``
-    neighbours and drops the suppressed ids — at most ``s`` answers can be
-    dropped, so at least ``k`` survive or the tree is exhausted — then
-    merges a brute pass over the cell's live inserts. Every cell thus
-    returns the exact top-k of its live records, and the ring guarantee
-    and escalation above stay exact unchanged.
+    ``streaming.incremental.knn_probe_live`` runs this same pass over the
+    visible record set (``_visible``): the stored rows minus the delta's
+    suppressed ids, plus its live inserts in their cells. Every cell then
+    returns the exact top-k of its live records, so the ring guarantee and
+    escalation stay exact unchanged.
     """
     snap = _pinned(path, "knn_probe_index")
     return _knn_probe(
@@ -450,14 +459,9 @@ def _knn_probe(
     y_col: str,
     delta: tuple[DataFrame, DataFrame] | None = None,
 ) -> DataFrame:
-    """knn_probe_index over the node dirs of the pinned snapshot ``snap`` ⊕
-    ``delta`` = (live inserts with id/x/y, suppressed ids); ``None`` probes
-    the stored trees alone."""
-    from pyspark.sql import Window
-
-    from metric_search_spark.functions.spatial import kring_cells_col
-    from metric_search_spark.operators.joins import _guarantee_col
-
+    """knn_probe_index over the visible record set of the pinned snapshot
+    ``snap`` ⊕ ``delta`` = (live inserts with id/x/y, suppressed ids);
+    ``None`` probes the stored rows alone."""
     spark = probes.sparkSession
     res, metric_name = snap["res"], snap["metric"]
     # the ring-guarantee verdict compares the kth distance against a raw L2
@@ -473,15 +477,13 @@ def _knn_probe(
             f"operators.joins.knn_join with an explicit coord_scale"
         )
     metric = get_metric(metric_name)
-    base = _load_nodes(spark, path, snap)
-    nodes = base.withColumn("kind", F.lit(_TREE))
-    if delta is not None:
-        live, suppress = delta
-        nodes = nodes.unionByName(
-            _delta_overlay(base, live, suppress, res), allowMissingColumns=True
-        )
-    # one cache for every ring round: the overlay is derived once per call
-    nodes = nodes.persist()
+    # one cache for every ring round; a stored cell is one kernel group
+    # (salt 0 on both sides of the cogroup)
+    cells = (
+        _visible(_load_nodes(spark, path, snap), res, delta)
+        .withColumn("_salt", F.lit(0))
+        .persist()
+    )
     grid_n = 1 << res
 
     probes_c = with_xy_cell(
@@ -496,51 +498,6 @@ def _knn_probe(
         out="_cell",
     ).persist()
 
-    def fn(key, probe_pdf, node_pdf):
-        import numpy as np
-        import pandas as pd
-
-        if len(probe_pdf) == 0 or len(node_pdf) == 0:
-            return pd.DataFrame(
-                {"query_id": [], "neighbor_id": [], "dist": []}
-            ).astype({"query_id": "int64", "neighbor_id": "int64", "dist": "float64"})
-        kind = node_pdf["kind"].to_numpy()
-        tree_pdf = node_pdf[kind == _TREE]
-        ins_pdf = node_pdf[kind == _INSERT]
-        sup = kind == _SUPPRESSED
-        dropped = set(node_pdf["id"].to_numpy()[sup].tolist())
-        # one suppressed row drops at most one answer: k survive the filter
-        # unless the tree runs out of records
-        fetch = k + int(sup.sum())
-        tree = _tree_from_pdf(tree_pdf, metric)
-        ids = tree_pdf["id"].to_numpy()
-        lx = ins_pdf["vx"].to_numpy(np.float64)
-        ly = ins_pdf["vy"].to_numpy(np.float64)
-        lids = ins_pdf["id"].to_numpy()
-        qs, ns, ds = [], [], []
-        P = np.column_stack(
-            (probe_pdf["_x"].to_numpy(np.float64), probe_pdf["_y"].to_numpy(np.float64))
-        )
-        pids = probe_pdf["_id"].to_numpy()
-        for i in range(len(P)):
-            hits = []
-            for node, dist in tree.knn(P[i], k=fetch, prune="safe"):
-                nid = int(ids[node])
-                if nid not in dropped:
-                    hits.append((dist, nid))
-            if len(lids):
-                dx = lx - P[i, 0]
-                dy = ly - P[i, 1]
-                d = np.sqrt(dx * dx + dy * dy)
-                top = np.lexsort((lids, d))[:k]
-                hits += zip(d[top].tolist(), lids[top].tolist())
-            hits.sort()
-            for dist, nid in hits[:k]:
-                qs.append(int(pids[i]))
-                ns.append(nid)
-                ds.append(float(dist))
-        return pd.DataFrame({"query_id": qs, "neighbor_id": ns, "dist": ds})
-
     w = Window.partitionBy("query_id").orderBy("dist", "neighbor_id")
     done_parts = []
     round_caches: list[DataFrame] = []
@@ -554,15 +511,10 @@ def _knn_probe(
                 "_y",
                 F.explode(
                     kring_cells_col(F.col("_cell"), res, min(ring, grid_n))
-                ).alias("cell"),
+                ).alias("_cell"),
+                F.lit(0).alias("_salt"),
             )
-            partial = (
-                cand.groupBy("cell")
-                .cogroup(nodes.groupBy("cell"))
-                .applyInPandas(
-                    fn, schema="query_id long, neighbor_id long, dist double"
-                )
-            )
+            partial = _partial_topk(cand, cells, metric, k, "long", "long")
             topk = (
                 partial.withColumn("rank", F.row_number().over(w))
                 .where(F.col("rank") <= k)
@@ -609,7 +561,7 @@ def _knn_probe(
             out = out.unionByName(p)
         return out.localCheckpoint(eager=True)
     finally:
-        nodes.unpersist()
+        cells.unpersist()
         probes_c.unpersist()
         # the eager checkpoint above materialized everything the per-round
         # caches fed — release them instead of leaking one per ring round

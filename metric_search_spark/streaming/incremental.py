@@ -7,14 +7,15 @@ per-cell tree index** (sources/index.py):
 - ``delete_ids``     — erase: tombstone rows (op='D'); like the reference,
                        deleting re-exposes nothing until refresh — probes
                        filter tombstones exactly
-- ``knn_probe_live`` — probes see base trees ⊕ delta in one stored-index
-                       pass (sources/index.knn_probe_index): the delta rides
-                       the per-cell cogroup as an overlay — each cell's tree
-                       answers k + (suppressed ids in that cell) and drops
-                       them, then a brute pass over the cell's live inserts
-                       merges in; the ring guarantee stays exact unchanged
+- ``knn_probe_live`` — probes see base ⊕ delta in one stored-index pass
+                       (sources/index.knn_probe_index) over the visible
+                       record set (sources/index._visible: stored rows minus
+                       suppressed ids, plus live inserts in their cells),
+                       each cell ranked by knn_join's flat kernel; the ring
+                       guarantee stays exact unchanged
 - ``compact_index``  — applies the delta: ONLY cells touched by delta rows
-                       are rebuilt (cell-scoped refresh, no global lock
+                       are rebuilt from that same visible record set
+                       (cell-scoped refresh, no global lock
                        analog needed), written with the untouched cells as
                        one new generation, and ONE snapshot publish both
                        swaps it in and marks the delta files it read as
@@ -41,18 +42,18 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from metric_search_spark.functions.spatial import cell_from_xy_col
-from metric_search_spark.operators.joins import _clamp01
 from metric_search_spark.sources.index import (
     _VERSION,
     NODE_SCHEMA,
     _build_kernel,
     _data_files,
+    _inserts,
     _knn_probe,
     _load_nodes,
     _pinned,
     _publish,
     _snapshot,
+    _visible,
 )
 
 __all__ = [
@@ -152,9 +153,9 @@ def knn_probe_live(
     x_col: str = "x",
     y_col: str = "y",
 ) -> DataFrame:
-    """kNN over base-index ⊕ delta in ONE stored-index pass: the delta's
-    live inserts and suppressed ids ride the per-cell cover-tree cogroup as
-    an overlay (sources.index.knn_probe_index documents the exactness).
+    """kNN over base-index ⊕ delta in ONE stored-index pass over the
+    visible record set (sources.index.knn_probe_index documents the
+    exactness).
     Pins one snapshot, then lists the delta files it has not applied."""
     spark = probes.sparkSession
     snap = _pinned(path, "knn_probe_live")
@@ -180,20 +181,18 @@ def compact_index(spark: SparkSession, path: str) -> int:
     if not files:
         return 0
     res = snap["res"]
-    # the same suppression knn_probe_live applies, so compaction lands the
-    # identical record set
     live, suppress = _effective_delta(_delta_frame(spark, path, files))
     nodes = _load_nodes(spark, path, snap)
 
-    live_c = live.withColumn(
-        "cell", cell_from_xy_col(_clamp01(F.col("x")), _clamp01(F.col("y")), res)
-    )
     # touched cells = destinations of live rows ∪ CURRENT base cell of every
     # suppressed id: an update that moves a record across cells must rebuild
     # both its old cell (drop the stale copy) and its new one (add the fresh)
     stale_cells = nodes.join(suppress, "id", "left_semi").select("cell")
     touched = (
-        live_c.select("cell").unionByName(stale_cells).distinct().persist()
+        _inserts(live, res).select(F.col("_cell").alias("cell"))
+        .unionByName(stale_cells)
+        .distinct()
+        .persist()
     )
     # crash-ordering — the snapshot publish is the ONE commit point:
     #   1. write the new generation: every visible node row, touched cells
@@ -209,26 +208,20 @@ def compact_index(spark: SparkSession, path: str) -> int:
         n_touched = touched.count()
         new_nodes = snap["nodes"]
         if n_touched:
-            # records of touched cells = (base payload − suppressed ids) ∪
-            # live rows — an UPSERT. Applying the same delta twice (say it
-            # is appended again after a commit) is idempotent: the rebuilt
-            # content is a pure function of (visible base state, delta), so
-            # live ids are suppressed from their OWN committed copies and
-            # re-added with identical coordinates instead of duplicated
-            base_records = (
-                nodes.join(touched, "cell", "left_semi")
-                .join(suppress, "id", "left_anti")
-                .select(
-                    "id", F.col("vx").alias("_x"), F.col("vy").alias("_y"), "cell"
-                )
-            )
-            # every live destination cell is in `touched` by construction
-            new_records = live_c.select(
-                "id", F.col("x").alias("_x"), F.col("y").alias("_y"), "cell"
-            )
+            # records of touched cells = the visible set the probe ranks
+            # (stored − suppressed ids ∪ live rows; every live destination
+            # cell is in `touched` by construction) — an UPSERT. Applying
+            # the same delta twice (say it is appended again after a
+            # commit) is idempotent: the rebuilt content is a pure function
+            # of (visible base state, delta), so live ids are suppressed
+            # from their OWN committed copies and re-added with identical
+            # coordinates instead of duplicated
             rebuilt = (
-                base_records.unionByName(new_records)
-                .groupBy("cell")
+                _visible(
+                    nodes.join(touched, "cell", "left_semi"), res, (live, suppress)
+                )
+                .withColumnRenamed("_id", "id")
+                .groupBy("_cell")
                 .applyInPandas(_build_kernel(snap["metric"]), schema=NODE_SCHEMA)
             )
             gen = f"nodes/gen={snap['version'] + 1}-{uuid.uuid4().hex[:8]}"

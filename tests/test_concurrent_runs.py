@@ -12,22 +12,24 @@ removed at process exit (atexit), so sweeps leave no scratch behind.
 from __future__ import annotations
 
 import glob
+import os
 import subprocess
 import sys
 
 SF = "/root/testdata/sf0.001"
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 _CHILD = r"""
 import os, sys
 os.environ["MSK_RUN_TOKEN"] = str(os.getpid())
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, %r)
 from metric_search_spark.session import build_session
 from metric_search_spark.entry_queries import QUERIES
 spark = build_session(cpus=2, shuffle_partitions=4)
 rows = QUERIES["index_level_histogram"](spark, "%s").collect()
 assert rows, "empty histogram"
 print("OK", len(rows))
-""" % SF
+""" % (ROOT, SF)
 
 
 def test_two_concurrent_index_builds_do_not_interfere():

@@ -66,17 +66,6 @@ def test_knn_join_matches_bruteforce(spark):
         )
 
 
-def test_knn_join_covertree_kernel_same_result(spark):
-    tbl, build, probes = _image_probe_frames(spark, n=200, n_probes=30)
-    flat = knn_join(probes, build, k=4, res=2, kernel="flat").toPandas()
-    ct = knn_join(probes, build, k=4, res=2, kernel="covertree").toPandas()
-    key = ["query_id", "rank"]
-    flat = flat.sort_values(key).reset_index(drop=True)
-    ct = ct.sort_values(key).reset_index(drop=True)
-    assert (flat["neighbor_id"] == ct["neighbor_id"]).all()
-    np.testing.assert_allclose(flat["dist"], ct["dist"], atol=1e-9)
-
-
 def test_knn_join_salting_exact(spark):
     """All rows in one hot cell → salting splits it; results stay exact."""
     rng = np.random.default_rng(7)

@@ -131,12 +131,11 @@ def test_compaction_commit_point_and_idempotent_reapply(spark, tmp_path):
 
 
 def test_hot_cell_delete_burst_local_overfetch(spark, tmp_path):
-    """VERDICT r2 item 6: a delete burst concentrated in one hot cell must
-    not inflate every probe's base fetch — the burst's suppressed rows land
-    in the hot cell's overlay only, so far cells fetch exactly k, only the
-    hot cell over-fetches (by its own tombstone count), and answers stay
-    exact vs brute force."""
-    from metric_search_spark.sources.index import _SUPPRESSED, _delta_overlay
+    """VERDICT r2 item 6: a delete burst concentrated in one hot cell stays
+    local — the probe ranks the visible record set, in which the burst
+    removes rows from the hot cell only, and answers stay exact vs brute
+    force."""
+    from metric_search_spark.sources.index import _visible
     from metric_search_spark.streaming.incremental import _effective_delta
 
     rng = np.random.default_rng(44)
@@ -174,18 +173,16 @@ def test_hot_cell_delete_burst_local_overfetch(spark, tmp_path):
     for qid, grp in got.sort_values(["query_id", "rank"]).groupby("query_id"):
         assert list(grp["neighbor_id"]) == want[int(qid)], qid
 
-    # fetch-pressure pin: a cell's tree answers k + (its overlay's
-    # suppressed rows), so all 80 tombstones must sit in the hot cell's
-    # overlay and no far cell may carry an overlay row at all
+    # visibility pin: no tombstoned id is visible, and the hot cell keeps
+    # exactly its 20 live rows
     nodes = load_nodes(spark, path)
     hot_rows = nodes.where(F.col("id") < n_hot).select("cell").distinct()
     hot_cells = {r["cell"] for r in hot_rows.collect()}
     assert len(hot_cells) == 1, hot_cells
-    live, suppress = _effective_delta(read_delta(spark, path))
-    overlay = _delta_overlay(nodes, live, suppress, res=2).toPandas()
-    assert set(overlay["cell"]) == hot_cells, overlay
-    assert (overlay["kind"] == _SUPPRESSED).all(), overlay
-    assert sorted(overlay["id"]) == sorted(dead_ids)
+    vis = _visible(nodes, 2, _effective_delta(read_delta(spark, path))).toPandas()
+    assert not set(vis["_id"]) & set(dead_ids)
+    hot_vis = vis[vis["_cell"].isin(hot_cells)]
+    assert sorted(hot_vis["_id"]) == sorted(hot["id"].iloc[80:])
 
 
 def _assert_probe_exact(spark, path, effective, probes, k):
@@ -320,6 +317,83 @@ def test_update_and_reinsert_semantics(spark, tmp_path):
         assert list(grp["neighbor_id"]) == want[int(qid)], qid
     health = verify_index(spark, path).toPandas()
     assert health["covering_ok"].all()
+
+
+def _mixed_delta(spark, pdf, path, seed):
+    """Append 5 updates (moved anywhere, some across cells) and 30 inserts,
+    then tombstone 3 base ids and one of the inserts."""
+    rng = np.random.default_rng(seed)
+    upd = pdf.iloc[:5].assign(x=rng.random(5), y=rng.random(5))
+    new = pd.DataFrame({"id": np.arange(700, 730), "x": rng.random(30), "y": rng.random(30)})
+    append_delta(spark.createDataFrame(pd.concat([upd, new])), path)
+    delete_ids(spark.createDataFrame(pd.DataFrame({"id": [50, 51, 52, 705]})), path)
+
+
+def test_compaction_lands_the_visible_record_set(spark, tmp_path):
+    """Probe and compaction share one record set: after compact_index,
+    load_nodes holds exactly the (id, vx, vy) rows, in the same cells,
+    that _visible showed the probe before it."""
+    from metric_search_spark.sources.index import _visible
+    from metric_search_spark.streaming.incremental import _effective_delta
+
+    pdf, path = _base(spark, tmp_path, n=200)
+    _mixed_delta(spark, pdf, path, seed=61)
+    delta = _effective_delta(read_delta(spark, path))
+    before = _visible(load_nodes(spark, path), 2, delta).toPandas()
+    assert compact_index(spark, path) > 0
+    after = load_nodes(spark, path).toPandas()
+    assert len(before) == 200 + 30 - 4
+    assert sorted(zip(after["id"], after["cell"], after["vx"], after["vy"])) == sorted(
+        zip(before["_id"], before["_cell"], before["_x"], before["_y"])
+    )
+
+
+def test_lineage_after_compaction_matches_visible_nodes(spark, tmp_path):
+    """load_lineage is derived from the visible nodes, so after a
+    compaction it counts, per cell, exactly the rows the index holds."""
+    from metric_search_spark.sources.index import load_lineage
+
+    pdf, path = _base(spark, tmp_path, n=200)
+    _mixed_delta(spark, pdf, path, seed=62)
+    compact_index(spark, path)
+    nodes = load_nodes(spark, path).toPandas()
+    want = nodes.groupby("cell").agg(
+        n=("id", "size"), max_level=("level", "max"), min_level=("level", "min")
+    )
+    lin = load_lineage(spark, path).toPandas().set_index("cell").sort_index()
+    assert lin["n_nodes"].sum() == len(nodes) == 200 + 30 - 4
+    assert list(lin.index) == list(want.index)
+    assert (lin["n_nodes"] == want["n"]).all()
+    assert (lin["n_rows"] == want["n"]).all()
+    assert (lin["max_level"] == want["max_level"]).all()
+    assert (lin["min_level"] == want["min_level"]).all()
+    assert (lin["build_ms"] > 0).all()
+
+
+def test_probe_distances_bit_equal_numpy(spark, tmp_path):
+    """The stored-index probe measures with the kernels' one distance
+    expression: knn_probe_index and knn_probe_live distances equal numpy
+    sqrt(dx*dx + dy*dy) bit for bit. Few rows per cell, so most answers
+    span several cells and every kind of stored row is measured."""
+    from metric_search_spark.sources.index import knn_probe_index
+
+    pdf, path = _base(spark, tmp_path, n=60)
+    rng = np.random.default_rng(63)
+    probes = pd.DataFrame({"id": np.arange(9000, 9100), "x": rng.random(100), "y": rng.random(100)})
+
+    def assert_bit_equal(got, records):
+        q = probes.set_index("id").loc[got["query_id"]]
+        r = records.set_index("id").loc[got["neighbor_id"]]
+        dx = q["x"].to_numpy() - r["x"].to_numpy()
+        dy = q["y"].to_numpy() - r["y"].to_numpy()
+        np.testing.assert_array_equal(got["dist"].to_numpy(), np.sqrt(dx * dx + dy * dy))
+
+    assert_bit_equal(knn_probe_index(spark.createDataFrame(probes), path, k=6).toPandas(), pdf)
+    new = pd.DataFrame({"id": np.arange(800, 840), "x": rng.random(40), "y": rng.random(40)})
+    append_delta(spark.createDataFrame(new), path)
+    got = knn_probe_live(spark.createDataFrame(probes), path, k=6).toPandas()
+    assert got["neighbor_id"].isin(new["id"]).any()
+    assert_bit_equal(got, pd.concat([pdf, new]))
 
 
 def _cycle(spark, path, rng, ids, compact=True):

@@ -14,7 +14,7 @@ import time
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # Per-run hand-off namespace: concurrent sweeps at the same sf must not
 # cross-read each other's oracle hand-off files (ADVICE r3 item 5). Set

@@ -10,12 +10,13 @@ be 0 — every DP op is a selection over pinned doubles).
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def scalar_dp(D: np.ndarray) -> float:

@@ -21,7 +21,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 # isolate this run's hand-offs from any concurrent sweep
 os.environ.setdefault("MSK_RUN_TOKEN", str(os.getpid()))
@@ -31,7 +32,7 @@ import duckdb  # noqa: E402
 from tools.dtype_kinds import frame_kinds  # noqa: E402
 
 SF = "/root/testdata/sf0.001"
-OUT = "/root/repo/tests/data/oracle_dtypes_sf0001.json"
+OUT = os.path.join(ROOT, "tests/data/oracle_dtypes_sf0001.json")
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
