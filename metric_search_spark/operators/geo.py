@@ -401,12 +401,39 @@ def haversine_knn_join(
     """
     if k < 1:
         raise ValueError("haversine_knn_join: k must be >= 1")
+    return _doubling_knn(
+        _guarded(places, "haversine_knn_join"),
+        k,
+        hav_sql("alat", "alon", "blat", "blon"),
+        lambda probes, build, r_t: _window_candidates(
+            probes, build, int(math.ceil(9.0 * r_t)), 1, 2
+        ),
+        r0_m,
+        max_rounds,
+        "haversine_knn_join",
+    )
+
+
+def _doubling_knn(
+    p: DataFrame,
+    k: int,
+    hav: str,
+    candidates,
+    r0_m: float,
+    max_rounds: int,
+    op: str,
+) -> DataFrame:
+    """The doubling-radius loop of haversine_knn_join and
+    haversine_knn_join_sphere over the guarded places ``p``: round t asks
+    ``candidates(probes, build, r_t)`` for every (a, b) pair within
+    r_t = r0·2^t of the still-unresolved probes, ranks them by the SQL
+    ``hav`` expression and keeps the probes whose k-th candidate lies
+    strictly inside r_t. Raises naming ``op`` if probes remain after
+    ``max_rounds``."""
     from pyspark.sql import Window
 
-    p = _guarded(places, "haversine_knn_join")
     build = p
     probes = p
-    hav = hav_sql("alat", "alon", "blat", "blon")
     # output columns from the hav COLUMN (not a textual re-expansion of the
     # polynomial): same doubles, tiny expressions
     hav_e18_col = f"CAST(FLOOR(hav * {_d(1e18)}) AS BIGINT)"
@@ -419,7 +446,6 @@ def haversine_knn_join(
     parts: list[DataFrame] = []
     for t in range(max_rounds):
         r_t = r0_m * (2.0 ** t)
-        cell_t = int(math.ceil(9.0 * r_t))
         # hav is a PROJECTED column only — never a filter predicate on the
         # raw candidates: a WHERE on the polynomial drops the operator out
         # of whole-stage codegen and evaluates the mega-expression
@@ -427,7 +453,7 @@ def haversine_knn_join(
         # candidates at 100k places). The window sorts all candidates and
         # the k-cut happens on the tiny ranked output instead.
         cand = (
-            _window_candidates(probes, build, cell_t, 1, 2)
+            candidates(probes, build, r_t)
             .where(F.col("a_id") != F.col("b_id"))
             .withColumn("hav", F.expr(hav))
         )
@@ -465,7 +491,7 @@ def haversine_knn_join(
             break
     else:
         raise RuntimeError(
-            f"haversine_knn_join: {n_left} probes unresolved after "
+            f"{op}: {n_left} probes unresolved after "
             f"{max_rounds} rounds (r_max={r0_m * 2.0 ** (max_rounds - 1)} m)"
             " — raise r0_m or max_rounds"
         )
@@ -1721,8 +1747,6 @@ def haversine_knn_join_sphere(
     or lower max_rounds)."""
     if k < 1:
         raise ValueError("haversine_knn_join_sphere: k must be >= 1")
-    from pyspark.sql import Window
-
     lat_g = F.when(
         F.abs(F.col("lat_udeg")) > 90_000_000,
         F.raise_error(
@@ -1735,66 +1759,17 @@ def haversine_knn_join_sphere(
             F.lit("haversine_knn_join_sphere: |lon_udeg| > 180e6")
         ).cast("long"),
     ).otherwise(F.col("lon_udeg"))
-    p = places.select(
-        "place_id", lat_g.alias("lat_udeg"), lon_g.alias("lon_udeg")
+    return _doubling_knn(
+        places.select("place_id", lat_g.alias("lat_udeg"), lon_g.alias("lon_udeg")),
+        k,
+        hav_wrap_sql("alat", "alon", "blat", "blon"),
+        lambda probes, build, r_t: _sphere_candidates(
+            probes, build, r_t, cap_colat_deg
+        ),
+        r0_m,
+        max_rounds,
+        "haversine_knn_join_sphere",
     )
-    build = p
-    probes = p
-    hav = hav_wrap_sql("alat", "alon", "blat", "blon")
-    hav_e18_col = f"CAST(FLOOR(hav * {_d(1e18)}) AS BIGINT)"
-    dist_mm_col = (
-        f"CAST(FLOOR({asin_poly_sql('SQRT(hav)')}"
-        f" * {_d(2.0 * EARTH_R_M * 1000.0)}) AS BIGINT)"
-    )
-    w_rank = Window.partitionBy("a_id").orderBy("hav", "b_id")
-    w_a = Window.partitionBy("a_id")
-    parts: list[DataFrame] = []
-    for t in range(max_rounds):
-        r_t = r0_m * (2.0 ** t)
-        # hav stays a PROJECTED column (same codegen trap as the planar
-        # kNN — a WHERE on the polynomial drops to interpreted eval)
-        cand = (
-            _sphere_candidates(probes, build, r_t, cap_colat_deg)
-            .where(F.col("a_id") != F.col("b_id"))
-            .withColumn("hav", F.expr(hav))
-        )
-        ranked = (
-            cand.withColumn("rnk", F.row_number().over(w_rank))
-            .where(F.col("rnk") <= k)
-            .select("a_id", "rnk", "b_id", "hav")
-            .localCheckpoint(eager=False)
-        )
-        flagged = ranked.withColumn(
-            "_ok",
-            (F.count("*").over(w_a) == k)
-            & (F.max("hav").over(w_a) < F.lit(hav_threshold(r_t))),
-        )
-        resolved = flagged.where("_ok").select(
-            "a_id",
-            F.col("rnk").cast("long").alias("rnk"),
-            "b_id",
-            F.expr(hav_e18_col).alias("hav_e18"),
-            F.expr(dist_mm_col).alias("dist_mm"),
-        )
-        parts.append(resolved)
-        probes = probes.join(
-            resolved.select("a_id").distinct(),
-            probes["place_id"] == F.col("a_id"),
-            "left_anti",
-        ).localCheckpoint(eager=False)
-        n_left = probes.count()
-        if n_left == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"haversine_knn_join_sphere: {n_left} probes unresolved after "
-            f"{max_rounds} rounds (r_max={r0_m * 2.0 ** (max_rounds - 1)} m)"
-            " — raise r0_m or max_rounds"
-        )
-    out = parts[0]
-    for x in parts[1:]:
-        out = out.unionByName(x)
-    return out
 
 
 def haversine_knn_sphere_sql(places_sql: str, k: int) -> str:

@@ -25,13 +25,19 @@ stage 2 (fine refinement, Arrow kernel): per (cell, salt) group an
 
 Exactness across cell boundaries (the correctness crux the single-tree
 reference never faced): a probe's result is provably exact when its kth
-distance is ≤ the distance from the probe to the edge of the explored ring
+distance is < the distance from the probe to the edge of the explored ring
 square (``ring_guarantee_radius``). Probes that fail the guarantee escalate:
 for those (typically <1%) the join flips to a probe-expansion scheme — the
-unresolved probes explode to a doubled ring of candidate cells, meet the
-build side (salted by build-cell counts), and merge through a window top-k —
-doubling the ring until it covers the grid. Work in escalation rounds is
-proportional to the unresolved probes, not the build table. For
+unresolved probes explode to the grid-clipped window of a doubled ring (two
+``sequence()`` explodes over the probe cell's (cx, cy), so the plan does not
+grow with the ring), meet the build side (salted by build-cell counts), and
+merge through a window top-k — doubling the ring until it covers the grid,
+where the last round cross-joins the occupied cells. The probes a round
+leaves unresolved are materialised before the next round, so every round
+plans over a leaf and its plan is constant in size. Work in escalation
+rounds is proportional to the unresolved probes, not the build table. One
+driver (``_escalate``) runs these rounds for this join and for the
+stored-index probe (sources.index.knn_probe_index). For
 full-dimensional metrics indexed by a contractive 2-D projection (e.g. 64-d
 L2 indexed by two coordinates), the same guarantee holds scaled by
 ``coord_scale`` = the minimum axis scale, since d_full ≥ coord_scale · d_2d.
@@ -69,7 +75,12 @@ from pyspark.sql import functions as F
 
 from metric_search_spark.cells import cell_size
 from metric_search_spark.core.metrics import Metric, get_metric
-from metric_search_spark.functions.spatial import cell_from_xy_col, kring_cells_col
+from metric_search_spark.functions.spatial import (
+    cell_from_cxy_col,
+    cell_from_xy_col,
+    cell_xy_cols,
+    kring_cells_col,
+)
 
 __all__ = ["knn_join", "range_join", "asof_join", "KnnJoinStats"]
 
@@ -469,27 +480,44 @@ def _ranked_group_topk(
 
 
 def _expand_probes(
-    probes_c: DataFrame,
-    salts: DataFrame,
+    probes: DataFrame,
+    salts: DataFrame | None,
     res: int,
     ring_k: int,
-    build_cells: DataFrame | None = None,
+    build_cells: DataFrame,
 ) -> DataFrame:
-    """Escalation-path probe side: explode unresolved probes to their k-ring
-    of candidate cells (and the build side's salt buckets). When the ring
-    covers the whole grid, cross-join against the build side's distinct
-    occupied cells instead of enumerating the (2k+1)² offset square."""
+    """Escalation-path probe side: each probe explodes to the grid-clipped
+    window of cells within Chebyshev distance ``ring_k`` of its own — two
+    ``sequence()`` explodes over the cell's (cx, cy), so the plan is the
+    same size at any ring — and then to the build side's salt buckets
+    (``salts`` None: the build side is unsalted, every row in bucket 0).
+    When the ring covers the whole grid, cross-join against the build
+    side's distinct occupied cells instead of enumerating the grid."""
     # payload = whatever _prepare shipped (_vec for full-dim metrics, _x/_y
     # for the 2-D fast path) — the kernel's _group_matrix falls back to
     # (_x, _y) when _vec is absent, so the escalation path must keep them
-    payload = _payload_cols(probes_c)
-    if build_cells is not None and ring_k >= (1 << res):
-        cand = probes_c.select(*payload).crossJoin(F.broadcast(build_cells))
+    payload = _payload_cols(probes)
+    if ring_k >= (1 << res):
+        cand = probes.select(*payload).crossJoin(F.broadcast(build_cells))
     else:
-        cand = probes_c.select(
-            *payload,
-            F.explode(kring_cells_col(F.col("_cell"), res, ring_k)).alias("_cell"),
+        cx, cy = cell_xy_cols(F.col("_cell"))
+
+        def window(c: str) -> Column:
+            lo = F.greatest(F.col(c) - ring_k, F.lit(0))
+            hi = F.least(F.col(c) + ring_k, F.lit((1 << res) - 1))
+            return F.explode(F.sequence(lo, hi))
+
+        cand = (
+            probes.select(*payload, cx.alias("_cx"), cy.alias("_cy"))
+            .withColumn("_cx", window("_cx"))
+            .withColumn("_cy", window("_cy"))
+            .select(
+                *payload,
+                cell_from_cxy_col(F.col("_cx"), F.col("_cy"), res).alias("_cell"),
+            )
         )
+    if salts is None:
+        return cand.withColumn("_salt", F.lit(0))
     cand = cand.join(F.broadcast(salts), "_cell", "left")
     return cand.select(
         *payload,
@@ -509,8 +537,9 @@ def _partial_topk(
     bid_type: str,
 ) -> DataFrame:
     """Escalation-path kernel: per-(cell, salt) partial top-k rows
-    (≤ k per probe per group); merged by the caller's window. Also ranks
-    each cell of the stored index (sources.index._knn_probe)."""
+    (≤ k per probe per group), merged by ``_escalate``'s window. The
+    stored-index probe reaches it through the same driver, so it also ranks
+    each cell of the index's visible record set."""
     import pandas as pd
 
     out_schema = f"query_id {qid_type}, neighbor_id {bid_type}, dist double"
@@ -604,6 +633,116 @@ def _grid_knn(
     )
 
 
+_MAX_ROUNDS = 12  # escalation rounds per call; the last is exhaustive
+
+
+def _verdict(
+    ranked: DataFrame,
+    per_probe: DataFrame,
+    probes: DataFrame,
+    res: int,
+    ring_k: int,
+    need: int,
+    coord_scale: float,
+) -> tuple[DataFrame, DataFrame | None, int]:
+    """The ring-guarantee verdict on one round: a probe is resolved when its
+    ranked list (``per_probe``: query_id, cnt, kth) holds ``need`` rows and
+    its kth distance is STRICTLY inside the explored ring square — a kth
+    exactly on the guarantee radius can tie with an unexplored outside
+    point that wins the id tie-break. Returns (``ranked`` rows of the
+    resolved probes, the unresolved ``probes`` materialised for the next
+    round or None when there are none, their count). The materialisation is
+    what keeps each round's plan constant: the next round plans over a
+    leaf, not over this round's kernel, verdict and probe set."""
+    geo = probes.select(F.col("_id").alias("query_id"), "_x", "_y").withColumn(
+        "guar", _guarantee_col(res, ring_k) * F.lit(coord_scale)
+    )
+    ok = (F.coalesce(F.col("cnt"), F.lit(0)) >= F.lit(need)) & (
+        F.col("kth") < F.col("guar")
+    )
+    unres_ids = (
+        geo.join(per_probe, "query_id", "left")
+        .where(~F.coalesce(ok, F.lit(False)))
+        .select("query_id")
+    )
+    n_unres = unres_ids.count()
+    if n_unres == 0:
+        return ranked, None, 0
+    unresolved = probes.join(
+        unres_ids.select(F.col("query_id").alias("_id")), "_id", "left_semi"
+    ).localCheckpoint(eager=True)
+    return ranked.join(unres_ids, "query_id", "left_anti"), unresolved, n_unres
+
+
+def _escalate(
+    done: list[DataFrame],
+    probes: DataFrame,
+    build: DataFrame,
+    salts: DataFrame | None,
+    ring_k: int,
+    *,
+    res: int,
+    metric: Metric,
+    k: int,
+    need: int,
+    coord_scale: float,
+    max_rounds: int,
+    qid_type: str,
+    bid_type: str,
+    rounds: list[dict],
+) -> DataFrame:
+    """The ring-escalation driver of knn_join and of the stored-index probe
+    (sources.index.knn_probe_index). Each round ranks ``probes`` (prepared:
+    _id, payload, _cell) against the salted build side ``build`` (_cell,
+    _salt, payload; ``salts`` its hot-cell table, None when unsalted) over
+    the window of ring ``ring_k``, keeps what ``_verdict`` resolves and
+    doubles the ring for the rest. The round whose ring covers the grid, or
+    the ``max_rounds``-th, cross-joins the occupied cells and is final.
+    Appends one record per round to ``rounds`` and returns ``done`` ∪ the
+    rounds' answers, materialised; its round caches are released."""
+    grid_n = 1 << res
+    # re-aliased: a fresh attribute id, so the exhaustive round's cogroup
+    # with ``build`` is not an ambiguous self-join
+    build_cells = build.select(F.col("_cell").alias("_cell")).distinct()
+    w = Window.partitionBy("query_id").orderBy("dist", "neighbor_id")
+    caches: list[DataFrame] = []
+    try:
+        for rnd in range(max_rounds):
+            exhaustive = ring_k >= grid_n or rnd == max_rounds - 1
+            cand = _expand_probes(
+                probes, salts, res, grid_n if exhaustive else ring_k, build_cells
+            )
+            topk = (
+                _partial_topk(cand, build, metric, k, qid_type, bid_type)
+                .withColumn("rank", F.row_number().over(w))
+                .where(F.col("rank") <= k)
+                .persist()
+            )
+            caches.append(topk)
+            if exhaustive:
+                done.append(topk)
+                rounds.append({"ring_k": ring_k, "exhaustive": True})
+                break
+            per_probe = topk.groupBy("query_id").agg(
+                F.count("*").alias("cnt"), F.max("dist").alias("kth")
+            )
+            resolved, probes, n_unres = _verdict(
+                topk, per_probe, probes, res, ring_k, need, coord_scale
+            )
+            rounds.append({"ring_k": ring_k, "unresolved": n_unres})
+            done.append(resolved)
+            if probes is None:
+                break
+            ring_k *= 2
+        out = done[0]
+        for p in done[1:]:
+            out = out.unionByName(p)
+        return out.localCheckpoint(eager=True)
+    finally:
+        for c in caches:
+            c.unpersist()
+
+
 def knn_join(
     probes: DataFrame,
     build: DataFrame,
@@ -619,7 +758,7 @@ def knn_join(
     target_per_cell: int = 256,
     salt_threshold: int | None = None,
     coord_scale: float = 1.0,
-    max_rounds: int = 12,
+    max_rounds: int = _MAX_ROUNDS,
     grid_chunk_rows: int = 8192,
     stats: KnnJoinStats | None = None,
 ) -> DataFrame:
@@ -632,8 +771,8 @@ def knn_join(
     in [0,1)² (the 2-D index projection). Exact for any metric satisfying
     d(a,b) ≥ coord_scale · L2((ax,ay),(bx,by)).
 
-    This call is eager: it runs the escalation loop (one Spark job per round)
-    and returns the materialized union of per-round results. On the common
+    This call is eager: it runs the escalation rounds (``_escalate``) and
+    returns the materialized union of per-round results. On the common
     fast path the returned DataFrame is a narrow view over a persisted
     packed result whose cache handle rides along as ``._msk_backing`` —
     callers that need run-to-run isolation (benchmarks) should
@@ -661,10 +800,8 @@ def knn_join(
         probes, probe_id_col or id_col, vec_col, x_col, y_col, res
     ).persist()
     to_unpersist: list[DataFrame] = [build_c, probes_c]
-    done_parts: list[DataFrame] = []
-    grid_n = 1 << res
     try:
-        if grid_n == 1:
+        if res == 0:
             # res 0: the 2-D index cannot prune — bounded block-grid brute
             # force (see _grid_knn), one shot, provably exhaustive
             out = _grid_knn(
@@ -694,117 +831,17 @@ def knn_join(
         ).persist()
         to_unpersist.append(packed)
         ranked = _explode_ranked(packed)
-
         per_probe = packed.select(
             "query_id",
             F.size("_nids").cast("long").alias("cnt"),
             F.element_at("_dists", F.size("_dists")).alias("kth"),
         )
-        probe_geo = probes_c.select(
-            F.col("_id").alias("query_id"), "_x", "_y"
-        ).withColumn("guar", _guarantee_col(res, 1) * F.lit(coord_scale))
-        verdict = probe_geo.join(per_probe, "query_id", "left").select(
-            "query_id",
-            (
-                (
-                    F.coalesce(F.col("cnt"), F.lit(0))
-                    >= F.lit(min(k, max(n_build, 1)))
-                )
-                & (F.col("kth") < F.col("guar"))
-            ).alias("ok"),
+        need = min(k, max(n_build, 1))
+        resolved, unresolved, n_unres = _verdict(
+            ranked, per_probe, probes_c, res, 1, need, coord_scale
         )
-        unresolved_ids = (
-            verdict.where(~F.coalesce(F.col("ok"), F.lit(False)))
-            .select(F.col("query_id").alias("_id"))
-            .persist()
-        )
-        to_unpersist.append(unresolved_ids)
-        n_unres = unresolved_ids.count()
         stats.rounds.append({"ring_k": 1, "unresolved": n_unres})
-        if n_unres == 0:
-            done_parts.append(ranked)
-            unresolved = None
-        else:
-            done_parts.append(
-                ranked.join(
-                    unresolved_ids.select(F.col("_id").alias("query_id")),
-                    "query_id",
-                    "left_anti",
-                )
-            )
-            unresolved = probes_c.join(unresolved_ids, "_id", "left_semi")
-
-
-        # ---- escalation rounds: probe-expansion scheme, work ∝ unresolved
-        if unresolved is not None:
-            salts_b = _salts_for(build_c, salt_threshold)
-            build_salted = _with_salt(build_c, salts_b).persist()
-            to_unpersist.append(build_salted)
-            build_cells = build_salted.select(
-                F.col("_cell").alias("_cell")
-            ).distinct()
-            w = Window.partitionBy("query_id").orderBy("dist", "neighbor_id")
-            ring_k = 2
-            for rnd in range(max_rounds):
-                exhaustive = ring_k >= grid_n or rnd == max_rounds - 1
-                cand = _expand_probes(
-                    unresolved,
-                    salts_b,
-                    res,
-                    grid_n if exhaustive else ring_k,
-                    build_cells,
-                )
-                partial = _partial_topk(
-                    cand, build_salted, metric, k, qid_type, bid_type
-                )
-                topk = (
-                    partial.withColumn("rank", F.row_number().over(w))
-                    .where(F.col("rank") <= k)
-                    .persist()
-                )
-                to_unpersist.append(topk)
-                if exhaustive:
-                    done_parts.append(topk)
-                    stats.rounds.append({"ring_k": ring_k, "exhaustive": True})
-                    break
-                per_probe = topk.groupBy("query_id").agg(
-                    F.count("*").alias("cnt"), F.max("dist").alias("kth")
-                )
-                probe_geo = unresolved.select(
-                    F.col("_id").alias("query_id"), "_x", "_y"
-                ).withColumn("guar", _guarantee_col(res, ring_k) * F.lit(coord_scale))
-                verdict = probe_geo.join(per_probe, "query_id", "left").select(
-                    "query_id",
-                    (
-                        (
-                            F.coalesce(F.col("cnt"), F.lit(0))
-                            >= F.lit(min(k, max(n_build, 1)))
-                        )
-                        & (F.col("kth") < F.col("guar"))
-                    ).alias("ok"),
-                )
-                unresolved_ids = (
-                    verdict.where(~F.coalesce(F.col("ok"), F.lit(False)))
-                    .select(F.col("query_id").alias("_id"))
-                    .persist()
-                )
-                to_unpersist.append(unresolved_ids)
-                n_unres = unresolved_ids.count()
-                stats.rounds.append({"ring_k": ring_k, "unresolved": n_unres})
-                if n_unres == 0:
-                    done_parts.append(topk)
-                    break
-                done_parts.append(
-                    topk.join(
-                        unresolved_ids.select(F.col("_id").alias("query_id")),
-                        "query_id",
-                        "left_anti",
-                    )
-                )
-                unresolved = unresolved.join(unresolved_ids, "_id", "left_semi")
-                ring_k *= 2
-
-        if len(done_parts) == 1 and unresolved is None:
+        if unresolved is None:
             # common case (every probe resolved in the fast round): return
             # the narrow explode view over the persisted PACKED result —
             # zero extra materialization (checkpointing k·|probes| exploded
@@ -816,14 +853,27 @@ def knn_join(
             to_unpersist.remove(packed)
             ranked._msk_backing = packed  # type: ignore[attr-defined]
             return ranked
-        out = done_parts[0]
-        for p in done_parts[1:]:
-            out = out.unionByName(p)
-        # escalation happened: materialize the union via localCheckpoint
-        # (reads the persisted per-round results once), then release every
-        # internal cache
-        out = out.localCheckpoint(eager=True)
-        return out
+
+        # ---- escalation rounds: probe-expansion scheme, work ∝ unresolved
+        salts_b = _salts_for(build_c, salt_threshold)
+        build_salted = _with_salt(build_c, salts_b).persist()
+        to_unpersist.append(build_salted)
+        return _escalate(
+            [resolved],
+            unresolved,
+            build_salted,
+            salts_b,
+            2,
+            res=res,
+            metric=metric,
+            k=k,
+            need=need,
+            coord_scale=coord_scale,
+            max_rounds=max_rounds,
+            qid_type=qid_type,
+            bid_type=bid_type,
+            rounds=stats.rounds,
+        )
     finally:
         for df in to_unpersist:
             df.unpersist()

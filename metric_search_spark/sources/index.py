@@ -46,17 +46,13 @@ import time
 import uuid
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from metric_search_spark.core.covertree import CoverTree
 from metric_search_spark.core.metrics import get_metric
-from metric_search_spark.functions.spatial import kring_cells_col, with_xy_cell
-from metric_search_spark.operators.joins import (
-    _clamp01,
-    _guarantee_col,
-    _partial_topk,
-)
+from metric_search_spark.functions.spatial import with_xy_cell
+from metric_search_spark.operators.joins import _MAX_ROUNDS, _clamp01, _escalate
 
 NODE_SCHEMA = (
     "cell long, node_id int, parent_id int, child_pos int, level int, "
@@ -427,14 +423,17 @@ def knn_probe_index(
     x_col: str = "x",
     y_col: str = "y",
 ) -> DataFrame:
-    """kNN against the CHECKPOINTED index: probes route to their cell's
-    k-ring of stored cells, each cell ranks its records with knn_join's
-    flat kernel (operators.joins._partial_topk, distances
+    """kNN against the CHECKPOINTED index: probes route to the ring-1
+    window of stored cells around their own, each cell ranks its records
+    with knn_join's flat kernel (operators.joins._partial_topk, distances
     ``sqrt(dx*dx + dy*dy)``), and a window merges the per-cell lists.
     Returns (query_id, neighbor_id, dist, rank).
 
-    Exactness: same ring-guarantee logic as joins.knn_join; unresolved
-    probes re-run with the ring doubled against the same stored cells.
+    Exactness: knn_join's escalation driver (operators.joins._escalate)
+    runs the rounds, so the ring guarantee is the same: unresolved probes
+    re-run with the ring doubled against the same stored cells, and the
+    round whose ring covers the grid (or the last of knn_join's
+    ``max_rounds``) ranks every occupied cell.
 
     ``streaming.incremental.knn_probe_live`` runs this same pass over the
     visible record set (``_visible``): the stored rows minus the delta's
@@ -484,8 +483,6 @@ def _knn_probe(
         .withColumn("_salt", F.lit(0))
         .persist()
     )
-    grid_n = 1 << res
-
     probes_c = with_xy_cell(
         probes.select(
             F.col(id_col).cast("long").alias("_id"),
@@ -497,73 +494,23 @@ def _knn_probe(
         res,
         out="_cell",
     ).persist()
-
-    w = Window.partitionBy("query_id").orderBy("dist", "neighbor_id")
-    done_parts = []
-    round_caches: list[DataFrame] = []
-    unresolved = probes_c
-    ring = 1
     try:
-        while True:
-            cand = unresolved.select(
-                "_id",
-                "_x",
-                "_y",
-                F.explode(
-                    kring_cells_col(F.col("_cell"), res, min(ring, grid_n))
-                ).alias("_cell"),
-                F.lit(0).alias("_salt"),
-            )
-            partial = _partial_topk(cand, cells, metric, k, "long", "long")
-            topk = (
-                partial.withColumn("rank", F.row_number().over(w))
-                .where(F.col("rank") <= k)
-                .persist()
-            )
-            round_caches.append(topk)
-            if ring >= grid_n:
-                done_parts.append(topk)
-                break
-            per_probe = topk.groupBy("query_id").agg(
-                F.count("*").alias("cnt"), F.max("dist").alias("kth")
-            )
-            geo = unresolved.select(
-                F.col("_id").alias("query_id"), "_x", "_y"
-            ).withColumn("guar", _guarantee_col(res, ring))
-            verdict = geo.join(per_probe, "query_id", "left").select(
-                "query_id",
-                (
-                    # strict <: a kth EXACTLY on the ring's guarantee radius
-                    # can tie with an unexplored outside point that wins the
-                    # id tie-break (same fix as joins.knn_join)
-                    (F.coalesce(F.col("cnt"), F.lit(0)) >= k)
-                    & (F.col("kth") < F.col("guar"))
-                ).alias("ok"),
-            )
-            unres_ids = verdict.where(
-                ~F.coalesce(F.col("ok"), F.lit(False))
-            ).select(F.col("query_id").alias("_id"))
-            n_unres = unres_ids.count()
-            if n_unres == 0:
-                done_parts.append(topk)
-                break
-            done_parts.append(
-                topk.join(
-                    unres_ids.select(F.col("_id").alias("query_id")),
-                    "query_id",
-                    "left_anti",
-                )
-            )
-            unresolved = unresolved.join(unres_ids, "_id", "left_semi")
-            ring *= 2
-        out = done_parts[0]
-        for p in done_parts[1:]:
-            out = out.unionByName(p)
-        return out.localCheckpoint(eager=True)
+        return _escalate(
+            [],
+            probes_c,
+            cells,
+            None,
+            1,
+            res=res,
+            metric=metric,
+            k=k,
+            need=k,
+            coord_scale=1.0,
+            max_rounds=_MAX_ROUNDS,
+            qid_type="long",
+            bid_type="long",
+            rounds=[],
+        )
     finally:
         cells.unpersist()
         probes_c.unpersist()
-        # the eager checkpoint above materialized everything the per-round
-        # caches fed — release them instead of leaking one per ring round
-        for c in round_caches:
-            c.unpersist()

@@ -158,6 +158,75 @@ def test_knn_join_escalation_2d_fast_path(spark):
         assert got == want, qid
 
 
+def _record_candidate_plans(monkeypatch):
+    """Wrap the escalation rounds' probe expansion: record each round's
+    (ring, line count of its analyzed candidate plan)."""
+    from metric_search_spark.operators import joins
+
+    seen = []
+    expand = joins._expand_probes
+
+    def recording(probes, salts, res, ring_k, build_cells):
+        cand = expand(probes, salts, res, ring_k, build_cells)
+        tree = cand._jdf.queryExecution().analyzed().treeString()
+        seen.append((ring_k, len(tree.splitlines())))
+        return cand
+
+    monkeypatch.setattr(joins, "_expand_probes", recording)
+    return seen
+
+
+def _far_probe_case():
+    """300 points packed into [0, 0.05]², one probe in the far corner at
+    (0.99, 0.99) and one inside the cluster: at res=4 the far probe's
+    ring-1 to ring-8 windows are empty, so it escalates to the exhaustive
+    round while the near one resolves at once."""
+    rng = np.random.default_rng(0)
+    pts = pd.DataFrame(
+        {"id": np.arange(300), "x": 0.05 * rng.random(300), "y": 0.05 * rng.random(300)}
+    )
+    probes = pd.DataFrame({"id": [10_000, 10_001], "x": [0.99, 0.02], "y": [0.99, 0.03]})
+    return pts, probes
+
+
+def _assert_exact(got, records, probes, k):
+    """Every probe's rows are the brute-force top-k in (dist, id) order."""
+    P = records[["x", "y"]].to_numpy()
+    ids = records["id"].to_numpy()
+    for _, q in probes.iterrows():
+        d = np.sqrt((P[:, 0] - q.x) ** 2 + (P[:, 1] - q.y) ** 2)
+        want = sorted(range(len(ids)), key=lambda j: (d[j], ids[j]))[:k]
+        grp = got[got["query_id"] == q.id].sort_values("rank")
+        assert list(grp["rank"]) == list(range(1, len(want) + 1))
+        assert list(grp["neighbor_id"]) == [ids[j] for j in want], q.id
+        np.testing.assert_allclose(grp["dist"], d[want], rtol=0, atol=1e-15)
+
+
+def test_knn_join_far_probe_rounds_plan_constant(spark, monkeypatch):
+    """A probe far from every build row escalates through ring 2, 4, 8 and
+    the exhaustive round. Answers stay exact, and every window round plans
+    over the materialised unresolved probes, so its candidate plan has the
+    same size as the first escalation round's (it used to triple)."""
+    pts, probes = _far_probe_case()
+    seen = _record_candidate_plans(monkeypatch)
+    stats = KnnJoinStats()
+    got = knn_join(
+        spark.createDataFrame(probes), spark.createDataFrame(pts), k=5,
+        vec_col=None, res=4, stats=stats,
+    ).toPandas()
+    _assert_exact(got, pts, probes, 5)
+    assert stats.rounds == [
+        {"ring_k": 1, "unresolved": 1},
+        {"ring_k": 2, "unresolved": 1},
+        {"ring_k": 4, "unresolved": 1},
+        {"ring_k": 8, "unresolved": 1},
+        {"ring_k": 16, "exhaustive": True},
+    ]
+    assert [r for r, _ in seen] == [2, 4, 8, 16]
+    window_lines = [n for r, n in seen if r < 16]
+    assert window_lines == [window_lines[0]] * 3, seen
+
+
 def test_knn_join_res0_grid_plan_multichunk(spark):
     """The res=0 brute-force tier must stay exact when it splits into
     multiple probe × build chunks (bounded-memory block grid + window

@@ -396,6 +396,63 @@ def test_probe_distances_bit_equal_numpy(spark, tmp_path):
     assert_bit_equal(got, pd.concat([pdf, new]))
 
 
+def test_far_probe_rounds_exact_plan_constant(spark, tmp_path, monkeypatch):
+    """knn_probe_index and knn_probe_live (with a delta) escalate a probe
+    far from every record through ring 1, 2, 4, 8 and the exhaustive
+    round of knn_join's driver. Answers stay exact in (dist, id) order, and
+    every escalation round's candidate plan has the size of the first: each
+    plans over the materialised unresolved probes (the plan used to triple
+    per round)."""
+    from metric_search_spark.sources.index import knn_probe_index
+    from tests.test_spark_joins import (
+        _assert_exact,
+        _far_probe_case,
+        _record_candidate_plans,
+    )
+
+    pts, probes = _far_probe_case()
+    path = str(tmp_path / "idx_far")
+    build_index(spark.createDataFrame(pts), path, res=4, batches=1)
+    seen = _record_candidate_plans(monkeypatch)
+    got = knn_probe_index(spark.createDataFrame(probes), path, k=5).toPandas()
+    _assert_exact(got, pts, probes, 5)
+
+    new = pd.DataFrame({"id": [900, 901], "x": [0.06, 0.3], "y": [0.07, 0.2]})
+    append_delta(spark.createDataFrame(new), path)
+    delete_ids(spark.createDataFrame(pd.DataFrame({"id": [0, 1, 2]})), path)
+    got = knn_probe_live(spark.createDataFrame(probes), path, k=5).toPandas()
+    _assert_exact(got, pd.concat([pts.iloc[3:], new]), probes, 5)
+
+    # per call: ring 1 over the probes as given, then the escalation
+    # rounds (ring 2, 4, 8) over a leaf, then the exhaustive round
+    assert [r for r, _ in seen] == [1, 2, 4, 8, 16] * 2
+    for call in (seen[:5], seen[5:]):
+        lines = [n for _, n in call[1:4]]
+        assert lines == [lines[0]] * 3, seen
+
+
+def test_k_above_every_visible_row(spark, tmp_path):
+    """k larger than the whole visible record set: after ring 1 and 2 the
+    probe reaches the exhaustive round, which ranks every occupied cell,
+    and returns exactly the live rows in (dist, id) order."""
+    from tests.test_spark_joins import _assert_exact
+
+    pdf = pd.DataFrame(
+        {"id": np.arange(6), "x": [0.05, 0.1, 0.3, 0.6, 0.8, 0.95],
+         "y": [0.9, 0.1, 0.5, 0.2, 0.7, 0.05]}
+    )
+    path = str(tmp_path / "idx_small")
+    build_index(spark.createDataFrame(pdf), path, res=2, batches=2)
+    delete_ids(spark.createDataFrame(pd.DataFrame({"id": [2, 4]})), path)
+    new = pd.DataFrame({"id": [40], "x": [0.5], "y": [0.5]})
+    append_delta(spark.createDataFrame(new), path)
+    visible = pd.concat([pdf[~pdf["id"].isin([2, 4])], new])
+    probes = pd.DataFrame({"id": [9001, 9002, 9003], "x": [0.0, 0.5, 0.99], "y": [0.0, 0.45, 0.99]})
+    got = knn_probe_live(spark.createDataFrame(probes), path, k=8).toPandas()
+    assert (got.groupby("query_id").size() == len(visible)).all()
+    _assert_exact(got, visible, probes, 8)
+
+
 def _cycle(spark, path, rng, ids, compact=True):
     """Append rows ``ids`` at random coords (then compact); returns them."""
     rows = pd.DataFrame({"id": ids, "x": rng.random(len(ids)), "y": rng.random(len(ids))})

@@ -60,3 +60,16 @@ def test_order_insensitive():
     a = pd.DataFrame({"k": [1, 2, 3], "v": ["a", "b", "c"]})
     b = a.iloc[[2, 0, 1]].reset_index(drop=True)
     assert compare("t", a, b) == []
+
+
+def test_null_in_object_column_matches_across_representations():
+    """A null materialises as None on one side (Spark) and NaN on the other
+    (DuckDB's .df()): the same null must compare equal, and stay distinct
+    from the literal strings 'None' and 'nan'."""
+    got = pd.DataFrame({"k": [1, 2], "s": pd.Series(["a", None], dtype=object)})
+    want = pd.DataFrame({"k": [1, 2], "s": pd.Series(["a", np.nan], dtype=object)})
+    assert compare("t", got, want) == []
+    for literal in ("None", "nan"):
+        text = pd.DataFrame({"k": [1, 2], "s": pd.Series(["a", literal], dtype=object)})
+        assert compare("t", got, text) != []
+        assert compare("t", want, text) != []

@@ -28,11 +28,16 @@ TABLES = (
 ).split()
 
 
+_NULL = "\x00NULL"
+
+
 def normalize(df: pd.DataFrame) -> pd.DataFrame:
     df = df[sorted(df.columns)].copy()
     for c in df.columns:
         if df[c].dtype == object:
-            df[c] = df[c].astype(str)
+            # one token for every null first: astype(str) alone reads None
+            # as 'None' but NaN as 'nan', so the same null would mismatch
+            df[c] = df[c].where(df[c].notna(), _NULL).astype(str)
     return df.sort_values(list(df.columns), kind="mergesort").reset_index(drop=True)
 
 
