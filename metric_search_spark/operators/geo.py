@@ -428,10 +428,17 @@ def _doubling_knn(
     ``candidates(probes, build, r_t)`` for every (a, b) pair within
     r_t = r0·2^t of the still-unresolved probes, ranks them by the SQL
     ``hav`` expression and keeps the probes whose k-th candidate lies
-    strictly inside r_t. Raises naming ``op`` if probes remain after
-    ``max_rounds``."""
+    strictly inside r_t. Each round checkpoints its top-k rows once, with
+    that verdict (``_ok``) computed in the same ``a_id`` window; the count
+    that materialises the checkpoint is the number of probes it resolved
+    (``rnk = 1`` rows), taken off a running total. The next round's probes
+    are a lazy checkpoint (a leaf, so round plans do not grow) and the
+    final union reads the checkpoints without running a window again.
+    Raises naming ``op`` if probes remain after ``max_rounds``."""
     from pyspark.sql import Window
 
+    if max_rounds < 1:
+        raise ValueError(f"{op}: max_rounds must be >= 1")
     build = p
     probes = p
     # output columns from the hav COLUMN (not a textual re-expansion of the
@@ -444,6 +451,7 @@ def _doubling_knn(
     w_rank = Window.partitionBy("a_id").orderBy("hav", "b_id")
     w_a = Window.partitionBy("a_id")
     parts: list[DataFrame] = []
+    n_left = p.count()
     for t in range(max_rounds):
         r_t = r0_m * (2.0 ** t)
         # hav is a PROJECTED column only — never a filter predicate on the
@@ -457,38 +465,38 @@ def _doubling_knn(
             .where(F.col("a_id") != F.col("b_id"))
             .withColumn("hav", F.expr(hav))
         )
-        # ONE pass of the big window, cut to k rows per probe immediately;
-        # only those k*|probes| rows are checkpointed and re-read
+        # ONE pass of the big window, cut to k rows per probe; resolved iff
+        # the k-th candidate exists AND sits strictly inside r_t (then the
+        # window provably contains the true top-k) — the second window
+        # shares the a_id partitioning, so no extra shuffle or sort
         ranked = (
             cand.withColumn("rnk", F.row_number().over(w_rank))
             .where(F.col("rnk") <= k)
-            .select("a_id", "rnk", "b_id", "hav")
+            .withColumn(
+                "_ok",
+                (F.count("*").over(w_a) == k)
+                & (F.max("hav").over(w_a) < F.lit(hav_threshold(r_t))),
+            )
+            .select("a_id", "rnk", "b_id", "hav", "_ok")
             .localCheckpoint(eager=False)
         )
-        # resolved iff the k-th candidate exists AND sits strictly inside
-        # r_t (then the window provably contains the true top-k); comparing
-        # the cached hav column is cheap
-        flagged = ranked.withColumn(
-            "_ok",
-            (F.count("*").over(w_a) == k)
-            & (F.max("hav").over(w_a) < F.lit(hav_threshold(r_t))),
+        resolved = ranked.where("_ok")
+        parts.append(
+            resolved.select(
+                "a_id",
+                F.col("rnk").cast("long").alias("rnk"),
+                "b_id",
+                F.expr(hav_e18_col).alias("hav_e18"),
+                F.expr(dist_mm_col).alias("dist_mm"),
+            )
         )
-        resolved = flagged.where("_ok").select(
-            "a_id",
-            F.col("rnk").cast("long").alias("rnk"),
-            "b_id",
-            F.expr(hav_e18_col).alias("hav_e18"),
-            F.expr(dist_mm_col).alias("dist_mm"),
-        )
-        parts.append(resolved)
-        probes = probes.join(
-            resolved.select("a_id").distinct(),
-            probes["place_id"] == F.col("a_id"),
-            "left_anti",
-        ).localCheckpoint(eager=False)
-        n_left = probes.count()
+        resolved_ids = resolved.where(F.col("rnk") == 1).select("a_id")
+        n_left -= resolved_ids.count()
         if n_left == 0:
             break
+        probes = probes.join(
+            resolved_ids, probes["place_id"] == F.col("a_id"), "left_anti"
+        ).localCheckpoint(eager=False)
     else:
         raise RuntimeError(
             f"{op}: {n_left} probes unresolved after "

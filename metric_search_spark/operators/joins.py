@@ -12,6 +12,9 @@ stage 1 (coarse prune, relational): both sides are encoded to Morton quadkey
     candidate set is in a single group. Hot probe cells are **explicitly
     salted** (north rule): their probes split across ⌈n/threshold⌉ salt
     buckets and the halo fans out to each bucket; AQE is the safety net.
+    Each side's hot-cell table is aggregated once per call (``_hot_cells``)
+    and is absent when no cell is hot — then there is no salt fan-out and
+    no broadcast join at all.
 
 stage 2 (fine refinement, Arrow kernel): per (cell, salt) group an
     ``applyInPandas`` kernel computes each probe's exact top-k with one
@@ -26,7 +29,10 @@ stage 2 (fine refinement, Arrow kernel): per (cell, salt) group an
 Exactness across cell boundaries (the correctness crux the single-tree
 reference never faced): a probe's result is provably exact when its kth
 distance is < the distance from the probe to the edge of the explored ring
-square (``ring_guarantee_radius``). Probes that fail the guarantee escalate:
+square (``ring_guarantee_radius``). The round-1 kernel computes that verdict
+itself and returns it as a per-probe flag, so the round's verdict is one
+count of the unresolved flags on the persisted result. Probes that fail the
+guarantee escalate:
 for those (typically <1%) the join flips to a probe-expansion scheme — the
 unresolved probes explode to the grid-clipped window of a doubled ring (two
 ``sequence()`` explodes over the probe cell's (cx, cy), so the plan does not
@@ -48,8 +54,8 @@ the cogroup's sort handles |cells|·ring² + |cells| rows (thousands), not
 |build|·ring² + |probes| records (tens of millions); byte volume is
 unchanged but row-handling, sort comparisons, and Arrow per-row overhead
 shrink by the ~rows-per-cell factor (~256×). The kernel returns per-probe
-ranked arrays; the ring-guarantee verdict reads them narrowly and the
-row-per-rank form is a JVM-side posexplode. Shuffle bytes are
+ranked arrays and verdict flags; the row-per-rank form is a JVM-side
+posexplode. Shuffle bytes are
 |build|·ring² + |probes| + k·|probes| — never |build|×|probes|; per-group
 memory is bounded by the resolution's rows-per-cell target (and probe
 salting); no driver-side collect of data rows. The flagship plan at ring 1
@@ -73,7 +79,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from metric_search_spark.cells import cell_size
+from metric_search_spark.cells import cell_size, ring_guarantee_radius
 from metric_search_spark.core.metrics import Metric, get_metric
 from metric_search_spark.functions.spatial import (
     cell_from_cxy_col,
@@ -172,11 +178,14 @@ def _flat_topk(
     return all_idx, all_d
 
 
+_CLAMP_HI = 1.0 - 2.0**-31  # the largest coordinate _clamp01 keeps
+
+
 def _clamp01(c: Column) -> Column:
     """Clamp into [0, 1): cell assignment quantize-clips the same way, and the
     ring guarantee treats grid borders as fully covered — both must use the
     same clamped coordinate."""
-    return F.least(F.greatest(c.cast("double"), F.lit(0.0)), F.lit(1.0 - 2.0**-31))
+    return F.least(F.greatest(c.cast("double"), F.lit(0.0)), F.lit(_CLAMP_HI))
 
 
 def _prepare(
@@ -197,9 +206,14 @@ def _prepare(
     return df.select(*cols)
 
 
-def _salts_for(side_c: DataFrame, salt_threshold: int) -> DataFrame:
-    """Hot-cell table (cell, n_salt) from one side's per-cell counts."""
-    return (
+def _hot_cells(side_c: DataFrame, salt_threshold: int) -> DataFrame | None:
+    """Hot-cell table (cell, n_salt) of one prepared side, aggregated once
+    per call. Only the cells above ``salt_threshold`` rows reach the driver
+    (at most |side| / salt_threshold rows); they come back as a local
+    relation, so every join that reads the table reuses it without running
+    the aggregate again. None when no cell is hot: the side then sits at
+    salt 0, with no fan-out and no broadcast join."""
+    rows = (
         side_c.groupBy("_cell")
         .count()
         .where(F.col("count") > salt_threshold)
@@ -207,15 +221,23 @@ def _salts_for(side_c: DataFrame, salt_threshold: int) -> DataFrame:
             "_cell",
             F.ceil(F.col("count") / salt_threshold).cast("int").alias("n_salt"),
         )
+        .collect()
     )
+    if not rows:
+        return None
+    schema = f"_cell {side_c.schema['_cell'].dataType.simpleString()}, n_salt int"
+    return side_c.sparkSession.createDataFrame(rows, schema)
 
 
 def _payload_cols(side_c: DataFrame) -> list[str]:
     return [c for c in ("_id", "_vec", "_x", "_y") if c in side_c.columns]
 
 
-def _with_salt(side_c: DataFrame, salts: DataFrame) -> DataFrame:
-    """Deterministically scatter a hot cell's rows across its salt buckets."""
+def _with_salt(side_c: DataFrame, salts: DataFrame | None) -> DataFrame:
+    """Deterministically scatter a hot cell's rows across its salt buckets
+    (``salts`` None: no hot cell, every row in bucket 0)."""
+    if salts is None:
+        return side_c.withColumn("_salt", F.lit(0))
     return side_c.join(F.broadcast(salts), "_cell", "left").select(
         *_payload_cols(side_c),
         "_cell",
@@ -264,16 +286,19 @@ def _pack_cells(side_c: DataFrame) -> DataFrame:
 
 
 def _halo_build_packed(
-    build_c: DataFrame, salts: DataFrame, res: int, ring_k: int
+    build_c: DataFrame, salts: DataFrame | None, res: int, ring_k: int
 ) -> DataFrame:
     """Packed-cell halo: pack first, then replicate each cell row to its
-    k-ring and fan out across the target cell's probe salt buckets."""
+    k-ring and fan out across the target cell's probe salt buckets
+    (``salts`` None: no probe cell is hot, every copy goes to bucket 0)."""
     packed = _pack_cells(build_c)
     payload = [c for c in ("_ids", "_xs", "_ys", "_vecs") if c in packed.columns]
     exploded = packed.select(
         *payload,
         F.explode(kring_cells_col(F.col("_cell"), res, ring_k)).alias("_cell"),
     )
+    if salts is None:
+        return exploded.withColumn("_salt", F.lit(0))
     return exploded.join(F.broadcast(salts), "_cell", "left").select(
         *payload,
         "_cell",
@@ -307,24 +332,23 @@ def _pack_probes(probes_s: DataFrame) -> DataFrame:
     return packed.select(*cols)
 
 
-def _unpack_probes(probe_pdf) -> tuple[np.ndarray, np.ndarray]:
-    """(ids, record matrix) for a kernel group's probe side — packed
-    (_pids/_pxs/_pys[/_pvecs]) or plain rows."""
-    if "_pids" in probe_pdf.columns:
-        ids = np.concatenate([np.asarray(a) for a in probe_pdf["_pids"]])
-        if "_pvecs" in probe_pdf.columns:
-            P = np.vstack(
-                [
-                    np.asarray(flat, np.float64).reshape(len(cell_ids), -1)
-                    for cell_ids, flat in zip(probe_pdf["_pids"], probe_pdf["_pvecs"])
-                ]
-            )
-        else:
-            xs = np.concatenate([np.asarray(a, np.float64) for a in probe_pdf["_pxs"]])
-            ys = np.concatenate([np.asarray(a, np.float64) for a in probe_pdf["_pys"]])
-            P = np.column_stack((xs, ys))
-        return ids, P
-    return probe_pdf["_id"].to_numpy(), _group_matrix(probe_pdf)
+def _unpack_probes(probe_pdf) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(ids, record matrix, (x, y) matrix) for a kernel group's packed probe
+    side (_pids/_pxs/_pys[/_pvecs]); without _pvecs the record matrix IS
+    the (x, y) matrix."""
+    ids = np.concatenate([np.asarray(a) for a in probe_pdf["_pids"]])
+    xs = np.concatenate([np.asarray(a, np.float64) for a in probe_pdf["_pxs"]])
+    ys = np.concatenate([np.asarray(a, np.float64) for a in probe_pdf["_pys"]])
+    xy = np.column_stack((xs, ys))
+    if "_pvecs" not in probe_pdf.columns:
+        return ids, xy, xy
+    P = np.vstack(
+        [
+            np.asarray(flat, np.float64).reshape(len(cell_ids), -1)
+            for cell_ids, flat in zip(probe_pdf["_pids"], probe_pdf["_pvecs"])
+        ]
+    )
+    return ids, P, xy
 
 
 def _ranked_group_topk_arrays(
@@ -334,17 +358,26 @@ def _ranked_group_topk_arrays(
     k: int,
     qid_type: str,
     bid_type: str,
+    *,
+    res: int,
+    need: int,
+    coord_scale: float,
 ) -> DataFrame:
-    """Fast-path kernel, fully columnar: packed probes × packed halo cells
-    cogrouped by (cell, salt); output is ONE ROW PER PROBE carrying its
-    ranked neighbor/distance ARRAYS. Downstream the ring-guarantee verdict
-    reads size/last-element narrowly (no 20M-row aggregate shuffle) and the
-    row-per-rank form is a JVM-side posexplode — Arrow moves |probes| rows,
-    not k·|probes|."""
+    """Fast-path kernel, fully columnar: packed probes × packed ring-1 halo
+    cells cogrouped by (cell, salt); output is ONE ROW PER PROBE carrying
+    its ranked neighbor/distance ARRAYS and its ring-1 verdict ``_ok``:
+    ``need`` rows ranked and the kth distance STRICTLY below
+    ``cells.ring_guarantee_radius`` of the probe's clamped (x, y) at ring 1
+    times ``coord_scale`` — the numpy twin of ``_guarantee_col``, bit for
+    bit. A probe whose halo holds no build row comes back with empty arrays
+    and ``_ok`` false, so every probe has exactly one output row and the
+    verdict needs no join. The row-per-rank form is a JVM-side posexplode —
+    Arrow moves |probes| rows, not k·|probes|."""
     import pandas as pd
 
     out_schema = (
-        f"query_id {qid_type}, _nids array<{bid_type}>, _dists array<double>"
+        f"query_id {qid_type}, _nids array<{bid_type}>, _dists array<double>,"
+        " _ok boolean"
     )
     # object dtype: an empty float64 ndarray routes pyarrow into the
     # NumPyConverter, which cannot target list<> types
@@ -353,18 +386,35 @@ def _ranked_group_topk_arrays(
             "query_id": pd.Series([], dtype=object),
             "_nids": pd.Series([], dtype=object),
             "_dists": pd.Series([], dtype=object),
+            "_ok": pd.Series([], dtype=bool),
         }
     )
 
     def fn(key, probe_pdf, build_pdf):
-        if len(probe_pdf) == 0 or len(build_pdf) == 0:
+        if len(probe_pdf) == 0:
             return empty
+        pids, P, xy = _unpack_probes(probe_pdf)
+        if len(build_pdf) == 0:
+            return pd.DataFrame(
+                {
+                    "query_id": pids,
+                    "_nids": [[] for _ in pids],
+                    "_dists": [[] for _ in pids],
+                    "_ok": np.zeros(len(pids), dtype=bool),
+                }
+            )
         raw_ids, raw_B = _unpack_build(build_pdf)
         order = raw_ids.argsort(kind="stable")
         bids = raw_ids[order]
         B = raw_B[order]
-        pids, P = _unpack_probes(probe_pdf)
         idx, d = _flat_topk(metric, P, B, k)
+        kk = d.shape[1]
+        if kk >= need:
+            c = np.clip(xy, 0.0, _CLAMP_HI)
+            guar = ring_guarantee_radius(c[:, 0], c[:, 1], res, 1) * coord_scale
+            ok = d[:, kk - 1] < guar
+        else:
+            ok = np.zeros(len(pids), dtype=bool)
         nid_rows = bids[idx]
         # .tolist(): plain python scalars — Arrow's NumPyConverter refuses
         # numpy string scalars inside list values
@@ -373,6 +423,7 @@ def _ranked_group_topk_arrays(
                 "query_id": pids,
                 "_nids": [r.tolist() for r in nid_rows],
                 "_dists": [r.tolist() for r in d],
+                "_ok": ok,
             }
         )
 
@@ -419,7 +470,9 @@ def _unpack_build(build_pdf) -> tuple[np.ndarray, np.ndarray]:
 
 def _guarantee_col(res: int, ring_k: Column | int) -> Column:
     """Column twin of cells.ring_guarantee_radius: distance from the probe to
-    the nearest edge of its explored ring square (grid borders = covered)."""
+    the nearest edge of its explored ring square (grid borders = covered).
+    The round-1 kernel computes the same radius in numpy; the two must stay
+    bit-equal, or ring 1 and the escalation rounds judge probes apart."""
     s = F.lit(cell_size(res))
     k = ring_k if isinstance(ring_k, Column) else F.lit(float(ring_k))
     x = _clamp01(F.col("_x"))
@@ -638,24 +691,28 @@ _MAX_ROUNDS = 12  # escalation rounds per call; the last is exhaustive
 
 def _verdict(
     ranked: DataFrame,
-    per_probe: DataFrame,
     probes: DataFrame,
     res: int,
     ring_k: int,
     need: int,
     coord_scale: float,
 ) -> tuple[DataFrame, DataFrame | None, int]:
-    """The ring-guarantee verdict on one round: a probe is resolved when its
-    ranked list (``per_probe``: query_id, cnt, kth) holds ``need`` rows and
-    its kth distance is STRICTLY inside the explored ring square — a kth
-    exactly on the guarantee radius can tie with an unexplored outside
-    point that wins the id tie-break. Returns (``ranked`` rows of the
-    resolved probes, the unresolved ``probes`` materialised for the next
-    round or None when there are none, their count). The materialisation is
-    what keeps each round's plan constant: the next round plans over a
-    leaf, not over this round's kernel, verdict and probe set."""
+    """The ring-guarantee verdict on one escalation round: a probe is
+    resolved when its ``ranked`` rows (query_id, neighbor_id, dist) number
+    ``need`` and its kth distance is STRICTLY inside the explored ring
+    square — a kth exactly on the guarantee radius can tie with an
+    unexplored outside point that wins the id tie-break. Returns (``ranked``
+    rows of the resolved probes, the unresolved ``probes`` materialised for
+    the next round or None when there are none, their count). The
+    materialisation is what keeps each round's plan constant: the next
+    round plans over a leaf, not over this round's kernel, verdict and
+    probe set. knn_join's round 1 reads the kernel's own ``_ok`` flag
+    instead (``_ranked_group_topk_arrays``)."""
     geo = probes.select(F.col("_id").alias("query_id"), "_x", "_y").withColumn(
         "guar", _guarantee_col(res, ring_k) * F.lit(coord_scale)
+    )
+    per_probe = ranked.groupBy("query_id").agg(
+        F.count("*").alias("cnt"), F.max("dist").alias("kth")
     )
     ok = (F.coalesce(F.col("cnt"), F.lit(0)) >= F.lit(need)) & (
         F.col("kth") < F.col("guar")
@@ -723,11 +780,8 @@ def _escalate(
                 done.append(topk)
                 rounds.append({"ring_k": ring_k, "exhaustive": True})
                 break
-            per_probe = topk.groupBy("query_id").agg(
-                F.count("*").alias("cnt"), F.max("dist").alias("kth")
-            )
             resolved, probes, n_unres = _verdict(
-                topk, per_probe, probes, res, ring_k, need, coord_scale
+                topk, probes, res, ring_k, need, coord_scale
             )
             rounds.append({"ring_k": ring_k, "unresolved": n_unres})
             done.append(resolved)
@@ -771,14 +825,17 @@ def knn_join(
     in [0,1)² (the 2-D index projection). Exact for any metric satisfying
     d(a,b) ≥ coord_scale · L2((ax,ay),(bx,by)).
 
-    This call is eager: it runs the escalation rounds (``_escalate``) and
-    returns the materialized union of per-round results. On the common
+    This call is eager: it runs the escalation rounds (``_escalate``, at
+    most ``max_rounds``, which must be ≥ 1) and returns the materialized
+    union of per-round results. On the common
     fast path the returned DataFrame is a narrow view over a persisted
     packed result whose cache handle rides along as ``._msk_backing`` —
     callers that need run-to-run isolation (benchmarks) should
     ``getattr(out, "_msk_backing", out).unpersist()`` when done; otherwise
     Spark's ContextCleaner frees it on GC.
     """
+    if max_rounds < 1:
+        raise ValueError("knn_join: max_rounds must be >= 1")
     if isinstance(metric, str):
         metric = get_metric(metric)
     _require_distance(metric)
@@ -820,28 +877,27 @@ def knn_join(
         # ---- round 1: halo fast path over the full probe set -------------
         # fully columnar: both cogroup sides are packed per cell (thousands
         # of array rows through the shuffle sort, not millions of records),
-        # the kernel returns per-probe ranked ARRAYS, the verdict reads them
-        # narrowly, and rows-per-rank appear only via a JVM-side posexplode
-        salts_p = _salts_for(probes_c, salt_threshold)
-        probes_s = _with_salt(probes_c, salts_p)
-        probes_p = _pack_probes(probes_s)
+        # the kernel returns per-probe ranked ARRAYS with their verdict, and
+        # rows-per-rank appear only via a JVM-side posexplode
+        salts_p = _hot_cells(probes_c, salt_threshold)
+        probes_p = _pack_probes(_with_salt(probes_c, salts_p))
         halo = _halo_build_packed(build_c, salts_p, res, 1)
+        need = min(k, max(n_build, 1))
         packed = _ranked_group_topk_arrays(
-            probes_p, halo, metric, k, qid_type, bid_type
+            probes_p,
+            halo,
+            metric,
+            k,
+            qid_type,
+            bid_type,
+            res=res,
+            need=need,
+            coord_scale=coord_scale,
         ).persist()
         to_unpersist.append(packed)
-        ranked = _explode_ranked(packed)
-        per_probe = packed.select(
-            "query_id",
-            F.size("_nids").cast("long").alias("cnt"),
-            F.element_at("_dists", F.size("_dists")).alias("kth"),
-        )
-        need = min(k, max(n_build, 1))
-        resolved, unresolved, n_unres = _verdict(
-            ranked, per_probe, probes_c, res, 1, need, coord_scale
-        )
+        n_unres = packed.where(~F.col("_ok")).count()
         stats.rounds.append({"ring_k": 1, "unresolved": n_unres})
-        if unresolved is None:
+        if n_unres == 0:
             # common case (every probe resolved in the fast round): return
             # the narrow explode view over the persisted PACKED result —
             # zero extra materialization (checkpointing k·|probes| exploded
@@ -851,15 +907,21 @@ def knn_join(
             # Spark's CacheManager would otherwise hand the cached plan to
             # the next identical call.
             to_unpersist.remove(packed)
+            ranked = _explode_ranked(packed)
             ranked._msk_backing = packed  # type: ignore[attr-defined]
             return ranked
 
         # ---- escalation rounds: probe-expansion scheme, work ∝ unresolved
-        salts_b = _salts_for(build_c, salt_threshold)
+        unresolved = probes_c.join(
+            packed.where(~F.col("_ok")).select(F.col("query_id").alias("_id")),
+            "_id",
+            "left_semi",
+        ).localCheckpoint(eager=True)
+        salts_b = _hot_cells(build_c, salt_threshold)
         build_salted = _with_salt(build_c, salts_b).persist()
         to_unpersist.append(build_salted)
         return _escalate(
-            [resolved],
+            [_explode_ranked(packed.where(F.col("_ok")))],
             unresolved,
             build_salted,
             salts_b,
@@ -923,7 +985,7 @@ def range_join(
     probes_c = _prepare(
         probes, probe_id_col or id_col, vec_col, x_col, y_col, res
     ).persist()
-    salts_p = _salts_for(probes_c, salt_threshold)
+    salts_p = _hot_cells(probes_c, salt_threshold)
     probes_s = _with_salt(probes_c, salts_p)
     # packed halo matters even more here: the ring is ⌈r/cell⌉ wide, so raw
     # replication would shuffle |build|·(2k+1)² rows

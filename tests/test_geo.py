@@ -190,6 +190,16 @@ def test_knn_raises_when_rounds_exhausted(spark):
         haversine_knn_join(p, 1, r0_m=100.0, max_rounds=1)
 
 
+def test_knn_rejects_max_rounds_below_one(spark):
+    """max_rounds < 1 runs no round: it raises ValueError instead of an
+    UnboundLocalError from the loop's unresolved count."""
+    from metric_search_spark.operators.geo import haversine_knn_join
+
+    p = synth_places(spark, 20, seed=3)
+    with pytest.raises(ValueError, match="max_rounds"):
+        haversine_knn_join(p, 1, max_rounds=0)
+
+
 def test_pair_counts_match_radius_join(spark):
     """pair_counts_by_radius at a single radius equals haversine_radius_
     join's pair count and exact dist_mm sum."""

@@ -224,6 +224,16 @@ def test_knn_sphere_matches_brute_force(spark):
         ).all(), c
 
 
+def test_knn_sphere_rejects_max_rounds_below_one(spark):
+    """max_rounds < 1 runs no round: it raises ValueError instead of an
+    UnboundLocalError from the loop's unresolved count."""
+    from metric_search_spark.operators.geo import haversine_knn_join_sphere
+
+    p = synth_places_sphere(spark, 20, seed=SEED)
+    with pytest.raises(ValueError, match="max_rounds"):
+        haversine_knn_join_sphere(p, 1, max_rounds=0)
+
+
 def test_knn_sphere_pole_neighbors_distance_zero(spark):
     """Probes clamped AT the south pole have co-located rows as their
     nearest neighbors at exactly dist 0, ordered by b_id."""

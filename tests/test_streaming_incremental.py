@@ -6,7 +6,6 @@ from __future__ import annotations
 import os
 import shutil
 import threading
-import uuid
 
 import numpy as np
 import pandas as pd
@@ -24,7 +23,7 @@ from metric_search_spark.streaming.incremental import (
     stream_into_index,
 )
 
-from tests.sparkutil import get_spark
+from tests.sparkutil import count_jobs, get_spark
 
 
 @pytest.fixture(scope="module")
@@ -653,18 +652,14 @@ def test_clean_probe_jobs_flat_across_compactions(spark, tmp_path):
     after the 1st, and at most two node generations stay on disk."""
     pdf, path = _base(spark, tmp_path, n=300)
     rng = np.random.default_rng(70)
-    sc = spark.sparkContext
     probes = spark.createDataFrame(pdf.iloc[:10])
     jobs = []
     for cycle in range(3):
         _cycle(spark, path, rng, np.arange(800 + 10 * cycle, 810 + 10 * cycle))
-        group = f"clean-probe-{uuid.uuid4().hex}"
-        sc.setJobGroup(group, "clean knn_probe_live")
-        try:
-            knn_probe_live(probes, path, k=3).collect()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+        _, n = count_jobs(
+            spark, lambda: knn_probe_live(probes, path, k=3).collect()
+        )
+        jobs.append(n)
         # the build batches are one generation, each compaction one more
         gens = {d if d.startswith("gen=") else "build" for d in _node_dirs(path)}
         assert len(gens) <= 2, gens
