@@ -29,10 +29,12 @@ stage 2 (fine refinement, Arrow kernel): per (cell, salt) group an
 Exactness across cell boundaries (the correctness crux the single-tree
 reference never faced): a probe's result is provably exact when its kth
 distance is < the distance from the probe to the edge of the explored ring
-square (``ring_guarantee_radius``). The round-1 kernel computes that verdict
-itself and returns it as a per-probe flag, so the round's verdict is one
-count of the unresolved flags on the persisted result. Probes that fail the
-guarantee escalate:
+square (``ring_guarantee_radius``). Round 1 (``_knn_rounds``, shared by this
+join and the stored-index probe, sources.index.knn_probe_index) is the
+packed ring-1 halo kernel: it computes that verdict itself and returns it
+as a per-probe flag, so the round's verdict is one count of the unresolved
+flags on the checkpointed result. Probes that fail the guarantee escalate
+(``_escalate``, from ring 2):
 for those (typically <1%) the join flips to a probe-expansion scheme — the
 unresolved probes explode to the grid-clipped window of a doubled ring (two
 ``sequence()`` explodes over the probe cell's (cx, cy), so the plan does not
@@ -41,9 +43,7 @@ merge through a window top-k — doubling the ring until it covers the grid,
 where the last round cross-joins the occupied cells. The probes a round
 leaves unresolved are materialised before the next round, so every round
 plans over a leaf and its plan is constant in size. Work in escalation
-rounds is proportional to the unresolved probes, not the build table. One
-driver (``_escalate``) runs these rounds for this join and for the
-stored-index probe (sources.index.knn_probe_index). For
+rounds is proportional to the unresolved probes, not the build table. For
 full-dimensional metrics indexed by a contractive 2-D projection (e.g. 64-d
 L2 indexed by two coordinates), the same guarantee holds scaled by
 ``coord_scale`` = the minimum axis scale, since d_full ≥ coord_scale · d_2d.
@@ -590,9 +590,7 @@ def _partial_topk(
     bid_type: str,
 ) -> DataFrame:
     """Escalation-path kernel: per-(cell, salt) partial top-k rows
-    (≤ k per probe per group), merged by ``_escalate``'s window. The
-    stored-index probe reaches it through the same driver, so it also ranks
-    each cell of the index's visible record set."""
+    (≤ k per probe per group), merged by ``_escalate``'s window."""
     import pandas as pd
 
     out_schema = f"query_id {qid_type}, neighbor_id {bid_type}, dist double"
@@ -697,8 +695,9 @@ def _verdict(
     need: int,
     coord_scale: float,
 ) -> tuple[DataFrame, DataFrame | None, int]:
-    """The ring-guarantee verdict on one escalation round: a probe is
-    resolved when its ``ranked`` rows (query_id, neighbor_id, dist) number
+    """The ring-guarantee verdict on one escalation round (ring ≥ 2; ring 1
+    reads the round-1 kernel's own ``_ok`` flag, ``_knn_rounds``): a probe
+    is resolved when its ``ranked`` rows (query_id, neighbor_id, dist) number
     ``need`` and its kth distance is STRICTLY inside the explored ring
     square — a kth exactly on the guarantee radius can tie with an
     unexplored outside point that wins the id tie-break. Returns (``ranked``
@@ -706,8 +705,7 @@ def _verdict(
     the next round or None when there are none, their count). The
     materialisation is what keeps each round's plan constant: the next
     round plans over a leaf, not over this round's kernel, verdict and
-    probe set. knn_join's round 1 reads the kernel's own ``_ok`` flag
-    instead (``_ranked_group_topk_arrays``)."""
+    probe set."""
     geo = probes.select(F.col("_id").alias("query_id"), "_x", "_y").withColumn(
         "guar", _guarantee_col(res, ring_k) * F.lit(coord_scale)
     )
@@ -732,11 +730,10 @@ def _verdict(
 
 
 def _escalate(
-    done: list[DataFrame],
+    ring1: DataFrame,
     probes: DataFrame,
     build: DataFrame,
     salts: DataFrame | None,
-    ring_k: int,
     *,
     res: int,
     metric: Metric,
@@ -748,16 +745,19 @@ def _escalate(
     bid_type: str,
     rounds: list[dict],
 ) -> DataFrame:
-    """The ring-escalation driver of knn_join and of the stored-index probe
-    (sources.index.knn_probe_index). Each round ranks ``probes`` (prepared:
-    _id, payload, _cell) against the salted build side ``build`` (_cell,
-    _salt, payload; ``salts`` its hot-cell table, None when unsalted) over
-    the window of ring ``ring_k``, keeps what ``_verdict`` resolves and
-    doubles the ring for the rest. The round whose ring covers the grid, or
-    the ``max_rounds``-th, cross-joins the occupied cells and is final.
-    Appends one record per round to ``rounds`` and returns ``done`` ∪ the
-    rounds' answers, materialised; its round caches are released."""
+    """The escalation rounds after ring 1 (``_knn_rounds``), for the probes
+    it left unresolved. Each round ranks ``probes`` (prepared: _id,
+    payload, _cell) against the salted build side ``build`` (_cell, _salt,
+    payload; ``salts`` its hot-cell table, None when unsalted) over the
+    window of ring 2, 4, 8, …, keeps what ``_verdict`` resolves and doubles
+    the ring for the rest. The round whose ring covers the grid, or the
+    ``max_rounds``-th, cross-joins the occupied cells and is final. Appends
+    one record per round to ``rounds`` and returns ``ring1`` (round 1's
+    resolved rows) ∪ the rounds' answers, materialised; its round caches
+    are released."""
     grid_n = 1 << res
+    ring_k = 2
+    done = [ring1]
     # re-aliased: a fresh attribute id, so the exhaustive round's cogroup
     # with ``build`` is not an ambiguous self-join
     build_cells = build.select(F.col("_cell").alias("_cell")).distinct()
@@ -797,6 +797,91 @@ def _escalate(
             c.unpersist()
 
 
+def _knn_rounds(
+    probes_c: DataFrame,
+    build_c: DataFrame,
+    *,
+    salt_threshold: int | None,
+    res: int,
+    metric: Metric,
+    k: int,
+    need: int,
+    coord_scale: float,
+    max_rounds: int,
+    qid_type: str,
+    bid_type: str,
+    rounds: list[dict],
+) -> DataFrame:
+    """Every ring round of knn_join and of the stored-index probe
+    (sources.index.knn_probe_index), over prepared, persisted sides (_id,
+    payload, _cell). Round 1 runs the packed ring-1 halo kernel over every
+    probe (``_ranked_group_topk_arrays``), materialises it once and counts
+    its unresolved ``_ok`` flags; only when some probe is unresolved do
+    those probes go on to ``_escalate`` from ring 2. ``salt_threshold``
+    None puts every row at salt 0 on both sides, so a cell is one kernel
+    group; otherwise hot probe cells are salted in round 1 and hot build
+    cells in the escalation. Appends one record per round to ``rounds``.
+
+    The result is materialised and carries the pre-checkpoint round-1
+    kernel frame as ``_msk_plan`` for plan inspection."""
+    salts_p = None if salt_threshold is None else _hot_cells(probes_c, salt_threshold)
+    # fully columnar: both cogroup sides are packed per cell (thousands of
+    # array rows through the shuffle sort, not millions of records), the
+    # kernel returns per-probe ranked ARRAYS with their verdict, and
+    # rows-per-rank appear only via a JVM-side posexplode
+    kernel = _ranked_group_topk_arrays(
+        _pack_probes(_with_salt(probes_c, salts_p)),
+        _halo_build_packed(build_c, salts_p, res, 1),
+        metric,
+        k,
+        qid_type,
+        bid_type,
+        res=res,
+        need=need,
+        coord_scale=coord_scale,
+    )
+    # a checkpoint rather than a cache: AQE then coalesces the kernel's
+    # shuffle to the partitions the probes fill (one Python task for a
+    # small batch, not one per shuffle partition), and the result's lineage
+    # ends here, not at input files a later compaction deletes
+    packed = kernel.localCheckpoint(eager=True)
+    n_unres = packed.where(~F.col("_ok")).count()
+    rounds.append({"ring_k": 1, "unresolved": n_unres})
+    if n_unres == 0:
+        out = _explode_ranked(packed)
+    else:
+        # escalation rounds: probe-expansion scheme, work ∝ unresolved
+        unresolved = probes_c.join(
+            packed.where(~F.col("_ok")).select(F.col("query_id").alias("_id")),
+            "_id",
+            "left_semi",
+        ).localCheckpoint(eager=True)
+        salts_b = (
+            None if salt_threshold is None else _hot_cells(build_c, salt_threshold)
+        )
+        build_salted = _with_salt(build_c, salts_b).persist()
+        try:
+            out = _escalate(
+                _explode_ranked(packed.where(F.col("_ok"))),
+                unresolved,
+                build_salted,
+                salts_b,
+                res=res,
+                metric=metric,
+                k=k,
+                need=need,
+                coord_scale=coord_scale,
+                max_rounds=max_rounds,
+                qid_type=qid_type,
+                bid_type=bid_type,
+                rounds=rounds,
+            )
+        finally:
+            build_salted.unpersist()
+    out._msk_plan = kernel  # type: ignore[attr-defined]
+    return out
+
+
 def knn_join(
     probes: DataFrame,
     build: DataFrame,
@@ -825,14 +910,12 @@ def knn_join(
     in [0,1)² (the 2-D index projection). Exact for any metric satisfying
     d(a,b) ≥ coord_scale · L2((ax,ay),(bx,by)).
 
-    This call is eager: it runs the escalation rounds (``_escalate``, at
-    most ``max_rounds``, which must be ≥ 1) and returns the materialized
-    union of per-round results. On the common
-    fast path the returned DataFrame is a narrow view over a persisted
-    packed result whose cache handle rides along as ``._msk_backing`` —
-    callers that need run-to-run isolation (benchmarks) should
-    ``getattr(out, "_msk_backing", out).unpersist()`` when done; otherwise
-    Spark's ContextCleaner frees it on GC.
+    This call is eager: it runs ring 1 and the escalation rounds
+    (``_knn_rounds``; at most ``max_rounds`` after ring 1, which must be
+    ≥ 1) and returns their materialized result, which holds no cache: its
+    checkpoint blocks are freed by Spark's ContextCleaner on GC. The
+    pre-checkpoint round-1 kernel frame rides along as ``._msk_plan`` for
+    plan inspection.
     """
     if max_rounds < 1:
         raise ValueError("knn_join: max_rounds must be >= 1")
@@ -856,7 +939,6 @@ def knn_join(
     probes_c = _prepare(
         probes, probe_id_col or id_col, vec_col, x_col, y_col, res
     ).persist()
-    to_unpersist: list[DataFrame] = [build_c, probes_c]
     try:
         if res == 0:
             # res 0: the 2-D index cannot prune — bounded block-grid brute
@@ -874,62 +956,14 @@ def knn_join(
             )
             return out.localCheckpoint(eager=True)
 
-        # ---- round 1: halo fast path over the full probe set -------------
-        # fully columnar: both cogroup sides are packed per cell (thousands
-        # of array rows through the shuffle sort, not millions of records),
-        # the kernel returns per-probe ranked ARRAYS with their verdict, and
-        # rows-per-rank appear only via a JVM-side posexplode
-        salts_p = _hot_cells(probes_c, salt_threshold)
-        probes_p = _pack_probes(_with_salt(probes_c, salts_p))
-        halo = _halo_build_packed(build_c, salts_p, res, 1)
-        need = min(k, max(n_build, 1))
-        packed = _ranked_group_topk_arrays(
-            probes_p,
-            halo,
-            metric,
-            k,
-            qid_type,
-            bid_type,
-            res=res,
-            need=need,
-            coord_scale=coord_scale,
-        ).persist()
-        to_unpersist.append(packed)
-        n_unres = packed.where(~F.col("_ok")).count()
-        stats.rounds.append({"ring_k": 1, "unresolved": n_unres})
-        if n_unres == 0:
-            # common case (every probe resolved in the fast round): return
-            # the narrow explode view over the persisted PACKED result —
-            # zero extra materialization (checkpointing k·|probes| exploded
-            # rows costs a full pass + heap it then pays for in GC). The
-            # backing cache rides along on the returned DataFrame so callers
-            # that need run-to-run isolation (bench.py) can release it —
-            # Spark's CacheManager would otherwise hand the cached plan to
-            # the next identical call.
-            to_unpersist.remove(packed)
-            ranked = _explode_ranked(packed)
-            ranked._msk_backing = packed  # type: ignore[attr-defined]
-            return ranked
-
-        # ---- escalation rounds: probe-expansion scheme, work ∝ unresolved
-        unresolved = probes_c.join(
-            packed.where(~F.col("_ok")).select(F.col("query_id").alias("_id")),
-            "_id",
-            "left_semi",
-        ).localCheckpoint(eager=True)
-        salts_b = _hot_cells(build_c, salt_threshold)
-        build_salted = _with_salt(build_c, salts_b).persist()
-        to_unpersist.append(build_salted)
-        return _escalate(
-            [_explode_ranked(packed.where(F.col("_ok")))],
-            unresolved,
-            build_salted,
-            salts_b,
-            2,
+        return _knn_rounds(
+            probes_c,
+            build_c,
+            salt_threshold=salt_threshold,
             res=res,
             metric=metric,
             k=k,
-            need=need,
+            need=min(k, max(n_build, 1)),
             coord_scale=coord_scale,
             max_rounds=max_rounds,
             qid_type=qid_type,
@@ -937,8 +971,8 @@ def knn_join(
             rounds=stats.rounds,
         )
     finally:
-        for df in to_unpersist:
-            df.unpersist()
+        build_c.unpersist()
+        probes_c.unpersist()
 
 
 def range_join(
@@ -1017,8 +1051,8 @@ def range_join(
         .cogroup(halo.groupBy("_cell", "_salt"))
         .applyInPandas(fn, schema=out_schema)
     )
-    # release handle for the internal probes cache (the knn_join convention:
-    # getattr(out, "_msk_backing", out).unpersist() when done)
+    # release handle for the internal probes cache: callers run
+    # getattr(out, "_msk_backing", out).unpersist() when done
     out._msk_backing = probes_c  # type: ignore[attr-defined]
     return out
 

@@ -177,7 +177,7 @@ def cluster_quota(
     out = ranked.select("id", "dist", bucket.alias(bucket_col))
     # plan-pin handle: the checkpointed result's plan is just an RDD scan, so
     # tests inspect the pre-checkpoint ranking plan through this attribute
-    # (same convention as joins.knn_join._msk_backing)
+    # (joins.knn_join's checkpointed result carries its kernel the same way)
     out._msk_plan = pre  # type: ignore[attr-defined]
     return out
 

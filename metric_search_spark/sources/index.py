@@ -52,7 +52,12 @@ from pyspark.sql import functions as F
 from metric_search_spark.core.covertree import CoverTree
 from metric_search_spark.core.metrics import get_metric
 from metric_search_spark.functions.spatial import with_xy_cell
-from metric_search_spark.operators.joins import _MAX_ROUNDS, _clamp01, _escalate
+from metric_search_spark.operators.joins import (
+    _MAX_ROUNDS,
+    KnnJoinStats,
+    _clamp01,
+    _knn_rounds,
+)
 
 NODE_SCHEMA = (
     "cell long, node_id int, parent_id int, child_pos int, level int, "
@@ -422,28 +427,36 @@ def knn_probe_index(
     id_col: str = "id",
     x_col: str = "x",
     y_col: str = "y",
+    stats: KnnJoinStats | None = None,
 ) -> DataFrame:
-    """kNN against the CHECKPOINTED index: probes route to the ring-1
-    window of stored cells around their own, each cell ranks its records
-    with knn_join's flat kernel (operators.joins._partial_topk, distances
-    ``sqrt(dx*dx + dy*dy)``), and a window merges the per-cell lists.
-    Returns (query_id, neighbor_id, dist, rank).
+    """kNN against the CHECKPOINTED index, through knn_join's rounds
+    (operators.joins._knn_rounds). Round 1 is knn_join's packed ring-1
+    halo kernel: each probe meets the stored cells of the 3×3 window
+    around its own, ranked with the flat kernel (distances
+    ``sqrt(dx*dx + dy*dy)``), and the kernel flags the probes whose answer
+    the ring guarantee proves exact. Returns (query_id, neighbor_id, dist,
+    rank), materialised, so it stays readable after a compaction deletes
+    the files it read.
 
-    Exactness: knn_join's escalation driver (operators.joins._escalate)
-    runs the rounds, so the ring guarantee is the same: unresolved probes
-    re-run with the ring doubled against the same stored cells, and the
-    round whose ring covers the grid (or the last of knn_join's
-    ``max_rounds``) ranks every occupied cell.
+    Exactness: the verdict and escalation are knn_join's, so unresolved
+    probes re-run with the ring doubled from ring 2 against the same stored
+    cells, and the round whose ring covers the grid (or the last of
+    knn_join's ``max_rounds``) ranks every occupied cell. A stored cell is
+    one kernel group (no salting).
 
     ``streaming.incremental.knn_probe_live`` runs this same pass over the
     visible record set (``_visible``): the stored rows minus the delta's
     suppressed ids, plus its live inserts in their cells. Every cell then
     returns the exact top-k of its live records, so the ring guarantee and
     escalation stay exact unchanged.
+
+    ``stats``, if given, gets the index resolution and one record per
+    round; ``n_build`` stays 0, since counting the visible set would cost
+    a Spark job.
     """
     snap = _pinned(path, "knn_probe_index")
     return _knn_probe(
-        probes, path, snap, k, id_col=id_col, x_col=x_col, y_col=y_col
+        probes, path, snap, k, id_col=id_col, x_col=x_col, y_col=y_col, stats=stats
     )
 
 
@@ -457,6 +470,7 @@ def _knn_probe(
     x_col: str,
     y_col: str,
     delta: tuple[DataFrame, DataFrame] | None = None,
+    stats: KnnJoinStats | None = None,
 ) -> DataFrame:
     """knn_probe_index over the visible record set of the pinned snapshot
     ``snap`` ⊕ ``delta`` = (live inserts with id/x/y, suppressed ids);
@@ -475,14 +489,10 @@ def _knn_probe(
             f"{metric_name!r} — rebuild with 'euclidean' or probe via "
             f"operators.joins.knn_join with an explicit coord_scale"
         )
-    metric = get_metric(metric_name)
-    # one cache for every ring round; a stored cell is one kernel group
-    # (salt 0 on both sides of the cogroup)
-    cells = (
-        _visible(_load_nodes(spark, path, snap), res, delta)
-        .withColumn("_salt", F.lit(0))
-        .persist()
-    )
+    if stats is None:
+        stats = KnnJoinStats()
+    stats.resolution = res
+    cells = _visible(_load_nodes(spark, path, snap), res, delta).persist()
     probes_c = with_xy_cell(
         probes.select(
             F.col(id_col).cast("long").alias("_id"),
@@ -495,21 +505,19 @@ def _knn_probe(
         out="_cell",
     ).persist()
     try:
-        return _escalate(
-            [],
+        return _knn_rounds(
             probes_c,
             cells,
-            None,
-            1,
+            salt_threshold=None,
             res=res,
-            metric=metric,
+            metric=get_metric(metric_name),
             k=k,
             need=k,
             coord_scale=1.0,
             max_rounds=_MAX_ROUNDS,
             qid_type="long",
             bid_type="long",
-            rounds=[],
+            rounds=stats.rounds,
         )
     finally:
         cells.unpersist()

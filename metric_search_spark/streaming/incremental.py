@@ -11,8 +11,8 @@ per-cell tree index** (sources/index.py):
                        (sources/index.knn_probe_index) over the visible
                        record set (sources/index._visible: stored rows minus
                        suppressed ids, plus live inserts in their cells),
-                       each cell ranked by knn_join's flat kernel; the ring
-                       guarantee stays exact unchanged
+                       through knn_join's ring-1 halo kernel and escalation;
+                       the ring guarantee stays exact unchanged
 - ``compact_index``  — applies the delta: ONLY cells touched by delta rows
                        are rebuilt from that same visible record set
                        (cell-scoped refresh, no global lock
@@ -42,6 +42,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from metric_search_spark.operators.joins import KnnJoinStats
 from metric_search_spark.sources.index import (
     _VERSION,
     NODE_SCHEMA,
@@ -131,7 +132,8 @@ def _effective_delta(delta: DataFrame) -> tuple[DataFrame, DataFrame]:
 
     Every id the log touches suppresses its base copy: a tombstone removes
     it, and a live row REPLACES it, so the stale copy never competes with
-    the fresh one."""
+    the fresh one. The suppressed ids may repeat: their consumers (the
+    probe's anti-join, compaction's semi-join) are set operations."""
     w = Window.partitionBy("id").orderBy(
         F.col("seq").desc_nulls_last(), F.col("op").asc()
     )
@@ -141,7 +143,7 @@ def _effective_delta(delta: DataFrame) -> tuple[DataFrame, DataFrame]:
         .drop("_rn")
     )
     live = latest.where(F.col("op") == "I").select("id", "x", "y")
-    return live, delta.select("id").distinct()
+    return live, delta.select("id")
 
 
 def knn_probe_live(
@@ -152,10 +154,11 @@ def knn_probe_live(
     id_col: str = "id",
     x_col: str = "x",
     y_col: str = "y",
+    stats: KnnJoinStats | None = None,
 ) -> DataFrame:
     """kNN over base-index ⊕ delta in ONE stored-index pass over the
     visible record set (sources.index.knn_probe_index documents the
-    exactness).
+    exactness and ``stats``).
     Pins one snapshot, then lists the delta files it has not applied."""
     spark = probes.sparkSession
     snap = _pinned(path, "knn_probe_live")
@@ -169,6 +172,7 @@ def knn_probe_live(
         x_col=x_col,
         y_col=y_col,
         delta=_effective_delta(_delta_frame(spark, path, files)) if files else None,
+        stats=stats,
     )
 
 

@@ -1,8 +1,12 @@
-"""Shared SparkSession for tests: one local JVM per pytest run."""
+"""Shared SparkSession for tests (one local JVM per pytest run), a Spark
+job counter and the kNN exactness helpers several test modules use."""
 
 from __future__ import annotations
 
 import uuid
+
+import numpy as np
+import pandas as pd
 
 from metric_search_spark.session import build_session
 
@@ -42,3 +46,47 @@ def count_jobs(spark, fn):
         for p, v in saved.items():
             sc.setLocalProperty(p, v)
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def record_candidate_plans(monkeypatch):
+    """Wrap the escalation rounds' probe expansion: record each round's
+    (ring, line count of its analyzed candidate plan)."""
+    from metric_search_spark.operators import joins
+
+    seen = []
+    expand = joins._expand_probes
+
+    def recording(probes, salts, res, ring_k, build_cells):
+        cand = expand(probes, salts, res, ring_k, build_cells)
+        tree = cand._jdf.queryExecution().analyzed().treeString()
+        seen.append((ring_k, len(tree.splitlines())))
+        return cand
+
+    monkeypatch.setattr(joins, "_expand_probes", recording)
+    return seen
+
+
+def far_probe_case():
+    """300 points packed into [0, 0.05]², one probe in the far corner at
+    (0.99, 0.99) and one inside the cluster: at res=4 the far probe's
+    ring-1 to ring-8 windows are empty, so it escalates to the exhaustive
+    round while the near one resolves at once."""
+    rng = np.random.default_rng(0)
+    pts = pd.DataFrame(
+        {"id": np.arange(300), "x": 0.05 * rng.random(300), "y": 0.05 * rng.random(300)}
+    )
+    probes = pd.DataFrame({"id": [10_000, 10_001], "x": [0.99, 0.02], "y": [0.99, 0.03]})
+    return pts, probes
+
+
+def assert_exact(got, records, probes, k):
+    """Every probe's rows are the brute-force top-k in (dist, id) order."""
+    P = records[["x", "y"]].to_numpy()
+    ids = records["id"].to_numpy()
+    for _, q in probes.iterrows():
+        d = np.sqrt((P[:, 0] - q.x) ** 2 + (P[:, 1] - q.y) ** 2)
+        want = sorted(range(len(ids)), key=lambda j: (d[j], ids[j]))[:k]
+        grp = got[got["query_id"] == q.id].sort_values("rank")
+        assert list(grp["rank"]) == list(range(1, len(want) + 1))
+        assert list(grp["neighbor_id"]) == [ids[j] for j in want], q.id
+        np.testing.assert_allclose(grp["dist"], d[want], rtol=0, atol=1e-15)

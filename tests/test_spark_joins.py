@@ -14,7 +14,13 @@ from metric_search_spark.cells import coords_from_phash
 from metric_search_spark.operators.joins import KnnJoinStats, knn_join, range_join
 from metric_search_spark.sources.synth import lite_rows_for_ids
 
-from tests.sparkutil import count_jobs, get_spark
+from tests.sparkutil import (
+    assert_exact,
+    count_jobs,
+    far_probe_case,
+    get_spark,
+    record_candidate_plans,
+)
 
 
 @pytest.fixture(scope="module")
@@ -158,63 +164,19 @@ def test_knn_join_escalation_2d_fast_path(spark):
         assert got == want, qid
 
 
-def _record_candidate_plans(monkeypatch):
-    """Wrap the escalation rounds' probe expansion: record each round's
-    (ring, line count of its analyzed candidate plan)."""
-    from metric_search_spark.operators import joins
-
-    seen = []
-    expand = joins._expand_probes
-
-    def recording(probes, salts, res, ring_k, build_cells):
-        cand = expand(probes, salts, res, ring_k, build_cells)
-        tree = cand._jdf.queryExecution().analyzed().treeString()
-        seen.append((ring_k, len(tree.splitlines())))
-        return cand
-
-    monkeypatch.setattr(joins, "_expand_probes", recording)
-    return seen
-
-
-def _far_probe_case():
-    """300 points packed into [0, 0.05]², one probe in the far corner at
-    (0.99, 0.99) and one inside the cluster: at res=4 the far probe's
-    ring-1 to ring-8 windows are empty, so it escalates to the exhaustive
-    round while the near one resolves at once."""
-    rng = np.random.default_rng(0)
-    pts = pd.DataFrame(
-        {"id": np.arange(300), "x": 0.05 * rng.random(300), "y": 0.05 * rng.random(300)}
-    )
-    probes = pd.DataFrame({"id": [10_000, 10_001], "x": [0.99, 0.02], "y": [0.99, 0.03]})
-    return pts, probes
-
-
-def _assert_exact(got, records, probes, k):
-    """Every probe's rows are the brute-force top-k in (dist, id) order."""
-    P = records[["x", "y"]].to_numpy()
-    ids = records["id"].to_numpy()
-    for _, q in probes.iterrows():
-        d = np.sqrt((P[:, 0] - q.x) ** 2 + (P[:, 1] - q.y) ** 2)
-        want = sorted(range(len(ids)), key=lambda j: (d[j], ids[j]))[:k]
-        grp = got[got["query_id"] == q.id].sort_values("rank")
-        assert list(grp["rank"]) == list(range(1, len(want) + 1))
-        assert list(grp["neighbor_id"]) == [ids[j] for j in want], q.id
-        np.testing.assert_allclose(grp["dist"], d[want], rtol=0, atol=1e-15)
-
-
 def test_knn_join_far_probe_rounds_plan_constant(spark, monkeypatch):
     """A probe far from every build row escalates through ring 2, 4, 8 and
     the exhaustive round. Answers stay exact, and every window round plans
     over the materialised unresolved probes, so its candidate plan has the
     same size as the first escalation round's (it used to triple)."""
-    pts, probes = _far_probe_case()
-    seen = _record_candidate_plans(monkeypatch)
+    pts, probes = far_probe_case()
+    seen = record_candidate_plans(monkeypatch)
     stats = KnnJoinStats()
     got = knn_join(
         spark.createDataFrame(probes), spark.createDataFrame(pts), k=5,
         vec_col=None, res=4, stats=stats,
     ).toPandas()
-    _assert_exact(got, pts, probes, 5)
+    assert_exact(got, pts, probes, 5)
     assert stats.rounds == [
         {"ring_k": 1, "unresolved": 1},
         {"ring_k": 2, "unresolved": 1},
@@ -275,7 +237,7 @@ def test_range_join_matches_bruteforce(spark):
 def test_knn_join_rejects_max_rounds_below_one(spark):
     """max_rounds < 1 would leave every probe ring 1 cannot resolve
     without an escalation round, i.e. silently drop it: it raises."""
-    pts, probes = _far_probe_case()
+    pts, probes = far_probe_case()
     with pytest.raises(ValueError, match="max_rounds"):
         knn_join(
             spark.createDataFrame(probes), spark.createDataFrame(pts), k=5,
@@ -308,7 +270,7 @@ def test_knn_join_empty_halo_probe_escalates_exact(spark):
     stats = KnnJoinStats()
     got = knn_join(probes, build, k=4, res=3, stats=stats).toPandas()
     assert stats.rounds[0] == {"ring_k": 1, "unresolved": 1}, stats.rounds
-    _assert_exact(got, build_t, probes_t, 4)
+    assert_exact(got, build_t, probes_t, 4)
 
 
 def test_knn_join_kth_on_guarantee_radius_stays_unresolved(spark):
@@ -328,7 +290,7 @@ def test_knn_join_kth_on_guarantee_radius_stays_unresolved(spark):
         {"ring_k": 2, "unresolved": 0},
     ]
     assert list(got["neighbor_id"]) == [2] and list(got["dist"]) == [0.375]
-    _assert_exact(got, build_t, probes_t, 1)
+    assert_exact(got, build_t, probes_t, 1)
 
 
 def test_kernel_verdict_equals_guarantee_col(spark):
@@ -410,7 +372,7 @@ def test_knn_join_escalation_hot_build_cell_exact(spark):
     """The far probe escalates against a salted build side: the cluster's
     cell is hot (300 rows, threshold 50), so every escalation round fans the
     probe out to the cell's salt buckets. Both probes stay exact."""
-    pts, probes = _far_probe_case()
+    pts, probes = far_probe_case()
     stats = KnnJoinStats()
     got = knn_join(
         spark.createDataFrame(probes), spark.createDataFrame(pts), k=5,
@@ -418,7 +380,7 @@ def test_knn_join_escalation_hot_build_cell_exact(spark):
     ).toPandas()
     assert stats.rounds[0] == {"ring_k": 1, "unresolved": 1}
     assert stats.rounds[-1].get("exhaustive"), stats.rounds
-    _assert_exact(got, pts, probes, 5)
+    assert_exact(got, pts, probes, 5)
 
 
 def test_ring1_knn_join_no_hot_cell_jobs(spark):
@@ -437,15 +399,11 @@ def test_ring1_knn_join_no_hot_cell_jobs(spark):
         spark,
         lambda: knn_join(probes, build, k=3, vec_col=None, res=3, stats=stats),
     )
-    packed = out._msk_backing
-    try:
-        assert stats.rounds == [{"ring_k": 1, "unresolved": 0}]
-        plan = packed._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastExchange" not in plan, plan
-        assert jobs <= 13, jobs
-        _assert_exact(out.toPandas(), tbl, probes_t, 3)
-    finally:
-        packed.unpersist()
+    assert stats.rounds == [{"ring_k": 1, "unresolved": 0}]
+    plan = out._msk_plan._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastExchange" not in plan, plan
+    assert jobs <= 13, jobs
+    assert_exact(out.toPandas(), tbl, probes_t, 3)
 
 
 def test_far_probe_knn_join_jobs(spark):
@@ -453,7 +411,7 @@ def test_far_probe_knn_join_jobs(spark):
     at most the 55 Spark jobs measured when the round-1 verdict moved into
     the kernel and each hot-cell table came to be aggregated once
     (local[4])."""
-    pts, probes = _far_probe_case()
+    pts, probes = far_probe_case()
     stats = KnnJoinStats()
     out, jobs = count_jobs(
         spark,
@@ -464,4 +422,4 @@ def test_far_probe_knn_join_jobs(spark):
     )
     assert len(stats.rounds) == 5, stats.rounds
     assert jobs <= 55, jobs
-    _assert_exact(out.toPandas(), pts, probes, 5)
+    assert_exact(out.toPandas(), pts, probes, 5)

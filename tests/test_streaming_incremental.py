@@ -12,6 +12,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from metric_search_spark.operators.joins import KnnJoinStats
 from metric_search_spark.sources.index import build_index, load_nodes, verify_index
 from metric_search_spark.streaming import incremental
 from metric_search_spark.streaming.incremental import (
@@ -23,7 +24,13 @@ from metric_search_spark.streaming.incremental import (
     stream_into_index,
 )
 
-from tests.sparkutil import count_jobs, get_spark
+from tests.sparkutil import (
+    assert_exact,
+    count_jobs,
+    far_probe_case,
+    get_spark,
+    record_candidate_plans,
+)
 
 
 @pytest.fixture(scope="module")
@@ -398,35 +405,38 @@ def test_probe_distances_bit_equal_numpy(spark, tmp_path):
 def test_far_probe_rounds_exact_plan_constant(spark, tmp_path, monkeypatch):
     """knn_probe_index and knn_probe_live (with a delta) escalate a probe
     far from every record through ring 1, 2, 4, 8 and the exhaustive
-    round of knn_join's driver. Answers stay exact in (dist, id) order, and
+    round of knn_join's rounds. Answers stay exact in (dist, id) order, and
     every escalation round's candidate plan has the size of the first: each
     plans over the materialised unresolved probes (the plan used to triple
     per round)."""
     from metric_search_spark.sources.index import knn_probe_index
-    from tests.test_spark_joins import (
-        _assert_exact,
-        _far_probe_case,
-        _record_candidate_plans,
-    )
 
-    pts, probes = _far_probe_case()
+    pts, probes = far_probe_case()
     path = str(tmp_path / "idx_far")
     build_index(spark.createDataFrame(pts), path, res=4, batches=1)
-    seen = _record_candidate_plans(monkeypatch)
-    got = knn_probe_index(spark.createDataFrame(probes), path, k=5).toPandas()
-    _assert_exact(got, pts, probes, 5)
+    seen = record_candidate_plans(monkeypatch)
+    stats = KnnJoinStats()
+    got = knn_probe_index(
+        spark.createDataFrame(probes), path, k=5, stats=stats
+    ).toPandas()
+    assert_exact(got, pts, probes, 5)
+    assert stats.rounds[0] == {"ring_k": 1, "unresolved": 1}, stats.rounds
 
     new = pd.DataFrame({"id": [900, 901], "x": [0.06, 0.3], "y": [0.07, 0.2]})
     append_delta(spark.createDataFrame(new), path)
     delete_ids(spark.createDataFrame(pd.DataFrame({"id": [0, 1, 2]})), path)
-    got = knn_probe_live(spark.createDataFrame(probes), path, k=5).toPandas()
-    _assert_exact(got, pd.concat([pts.iloc[3:], new]), probes, 5)
+    stats = KnnJoinStats()
+    got = knn_probe_live(
+        spark.createDataFrame(probes), path, k=5, stats=stats
+    ).toPandas()
+    assert_exact(got, pd.concat([pts.iloc[3:], new]), probes, 5)
+    assert stats.rounds[0] == {"ring_k": 1, "unresolved": 1}, stats.rounds
 
-    # per call: ring 1 over the probes as given, then the escalation
-    # rounds (ring 2, 4, 8) over a leaf, then the exhaustive round
-    assert [r for r, _ in seen] == [1, 2, 4, 8, 16] * 2
-    for call in (seen[:5], seen[5:]):
-        lines = [n for _, n in call[1:4]]
+    # per call: ring 1 is the halo kernel (no probe expansion), then the
+    # escalation rounds (ring 2, 4, 8) over a leaf, then the exhaustive one
+    assert [r for r, _ in seen] == [2, 4, 8, 16] * 2
+    for call in (seen[:4], seen[4:]):
+        lines = [n for _, n in call[:3]]
         assert lines == [lines[0]] * 3, seen
 
 
@@ -434,8 +444,6 @@ def test_k_above_every_visible_row(spark, tmp_path):
     """k larger than the whole visible record set: after ring 1 and 2 the
     probe reaches the exhaustive round, which ranks every occupied cell,
     and returns exactly the live rows in (dist, id) order."""
-    from tests.test_spark_joins import _assert_exact
-
     pdf = pd.DataFrame(
         {"id": np.arange(6), "x": [0.05, 0.1, 0.3, 0.6, 0.8, 0.95],
          "y": [0.9, 0.1, 0.5, 0.2, 0.7, 0.05]}
@@ -449,7 +457,7 @@ def test_k_above_every_visible_row(spark, tmp_path):
     probes = pd.DataFrame({"id": [9001, 9002, 9003], "x": [0.0, 0.5, 0.99], "y": [0.0, 0.45, 0.99]})
     got = knn_probe_live(spark.createDataFrame(probes), path, k=8).toPandas()
     assert (got.groupby("query_id").size() == len(visible)).all()
-    _assert_exact(got, visible, probes, 8)
+    assert_exact(got, visible, probes, 8)
 
 
 def _cycle(spark, path, rng, ids, compact=True):
@@ -664,6 +672,62 @@ def test_clean_probe_jobs_flat_across_compactions(spark, tmp_path):
         gens = {d if d.startswith("gen=") else "build" for d in _node_dirs(path)}
         assert len(gens) <= 2, gens
     assert jobs[2] == jobs[0], jobs
+
+
+def test_probe_jobs_and_stats(spark, tmp_path):
+    """A ring-1-resolving stored-index probe runs knn_join's halo kernel
+    once: at most 10 Spark jobs for a clean knn_probe_index and 12 for a
+    knn_probe_live with a delta, collect included (measured when the probe
+    took knn_join's round 1, local[4]; 13 and 16 before). ``stats`` records
+    the index resolution and the one round."""
+    from metric_search_spark.sources.index import knn_probe_index
+
+    pdf, path = _base(spark, tmp_path, n=300)
+    probes_t = pdf.sample(10, random_state=5)
+    probes = spark.createDataFrame(probes_t)
+    stats = KnnJoinStats()
+    rows, jobs = count_jobs(
+        spark, lambda: knn_probe_index(probes, path, k=3, stats=stats).collect()
+    )
+    assert (stats.n_build, stats.resolution) == (0, 2)
+    assert stats.rounds == [{"ring_k": 1, "unresolved": 0}]
+    assert jobs <= 10, jobs
+    assert_exact(pd.DataFrame([r.asDict() for r in rows]), pdf, probes_t, 3)
+
+    rng = np.random.default_rng(71)
+    new = _cycle(spark, path, rng, np.arange(900, 920), compact=False)
+    delete_ids(spark.createDataFrame(pd.DataFrame({"id": pdf["id"].iloc[:5]})), path)
+    stats = KnnJoinStats()
+    rows, jobs = count_jobs(
+        spark, lambda: knn_probe_live(probes, path, k=3, stats=stats).collect()
+    )
+    assert stats.rounds == [{"ring_k": 1, "unresolved": 0}]
+    assert jobs <= 12, jobs
+    visible = pd.concat([pdf.iloc[5:], new])
+    assert_exact(pd.DataFrame([r.asDict() for r in rows]), visible, probes_t, 3)
+
+
+def test_probe_result_outlives_the_files_it_read(spark, tmp_path):
+    """A probe result is materialised: after two compactions, whose GC
+    deletes the build batches and the delta files it read, it still
+    collects to the brute-force answer."""
+    from metric_search_spark.sources.index import _data_files
+
+    pdf, path = _base(spark, tmp_path, n=200)
+    rng = np.random.default_rng(72)
+    new = _cycle(spark, path, rng, np.arange(700, 720), compact=False)
+    visible = pd.concat([pdf, new])
+    probes_t = visible.sample(12, random_state=8)
+    out = knn_probe_live(spark.createDataFrame(probes_t), path, k=4)
+
+    def files():
+        return set(_node_dirs(path)) | set(_data_files(f"{path}/delta"))
+
+    read = files()
+    _cycle(spark, path, rng, np.arange(720, 725))
+    _cycle(spark, path, rng, np.arange(725, 730))
+    assert not read & files()
+    assert_exact(out.toPandas(), visible, probes_t, 4)
 
 
 def test_compact_refuses_object_store_paths(spark):
